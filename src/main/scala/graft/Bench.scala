@@ -251,103 +251,16 @@ object Bench {
         "scan and derives ALL the pairs skip mode drops (the query locks " +
         "recall equality with the uncapped oracle, not a fast path; " +
         "production caps make the hot subset - and the surcharge - " +
-        "proportionally tiny). The production-cap end is now MEASURED " +
-        "(StressProbe skew_drop_* tags, 100k docs, 2% boilerplate flood, " +
-        "cap=64 marking <0.01% of buckets hot): uncapped 6.7s / " +
-        "capped-skip 3.1s / capped-salted 7.4s on the r14 box - skip is " +
-        "cheaper by exactly the flood pairs it refuses, salted pays ~10% " +
-        "over uncapped (the bounded second store scan) for the identical " +
-        "pair set with per-task candidate volume bounded by cap*salt. " +
-        "corpus_curated_survivors / corpus_audit_trail (and the r15 " +
-        "retention/fsck queries) exercise the REAL warehouse lifecycle " +
+        "proportionally tiny). corpus_curated_survivors / " +
+        "corpus_audit_trail (and the r15 retention/fsck queries) " +
+        "exercise the REAL warehouse lifecycle " +
         "(ingest 3 modalities' stores + governance scenario) against a " +
         "scratch warehouse built once per process in the unreported " +
         "warmup pass; their measured cost is the view read itself - " +
-        "label-store argmax scans plus id-sized joins. The EXPORT " +
-        "lifecycle is probe-measured (StressProbe export_* tags, r15 " +
-        "box): at 100k docs full-export 1.0s / 1%-delta extend 0.6s / " +
-        "read 0.3s / integrity 0.4s; at 200k docs 1.2 / 0.8 / 0.4 / " +
-        "0.6s - all fixed-cost-dominated sub-second jobs at probe " +
-        "scale; extend's rank window covers ONLY the delta by " +
-        "construction (plan-shaped: one co-located anti-join + " +
-        "additions-only window + numShards-row broadcast) while its " +
-        "write is manifest-sized thin id rows, the documented price of " +
-        "a self-contained artifact. warehouse_fsck at 200k docs: 2.9s as " +
-        "ONE union-of-aggregates job (was 3.9s as ~30 serial count " +
-        "actions - the serial shape paid a scheduler round-trip per " +
-        "check, which dominates on a real cluster; never on a query " +
-        "path). takedown_delete at 200k docs: 4.9s for one leased " +
-        "10-id governance cascade (anti-join rewrite + atomic swap of " +
-        "every touched table + tombstone/audit/label rebuild) - the " +
-        "documented gone-from-the-FILES price, paid per rare takedown " +
-        "call, never per read. STORE-SIZE INDEPENDENCE is now measured " +
-        "(StressProbe store_size_* tags, r16 box): the SAME 2,000-doc " +
-        "drop against a 200k-doc and a 1M-doc bucketed signature store " +
-        "(5x the corpus) costs 1.9s vs 1.9s - ratio 0.98, i.e. FLAT " +
-        "(one untimed warm-up drop first; without it the first drop " +
-        "pays ~2x JVM/codegen warm-up and the ratio reads 0.49) - the " +
-        "exchange-free candidate join leaves only the thin columnar " +
-        "band-scan as a store-sized term, which is noise at these " +
-        "sizes: drop cost is bounded by the increment, not the store. " +
-        "GOVERNANCE SLOPES measured the same way (StressProbe gov_* " +
-        "tags, r17 box, warmed): the full fsck audit costs 1.8s on a " +
-        "200k-doc warehouse and 2.5s on a 1M-doc one (5x docs -> 1.4x " +
-        "wall: the one-job union's fixed scheduling cost dominates, the " +
-        "id-projected checks add sublinearly); a 10-id takedown_delete " +
-        "costs 4.8s vs 6.4s (5x docs -> 1.3x: the per-call protocol - " +
-        "lease, swaps, audit, label rebuild - dominates the anti-join " +
-        "rewrites at these sizes). Both confirm metadata-sized scaling: " +
-        "neither read tracks corpus bytes. The one-stop warehouseStatus " +
-        "read (gov_status_* tags, same warmed warehouses) is FLAT and " +
-        "sub-second at both sizes - 0.27s at 200k docs vs 0.15s at 1M " +
-        "(noise-dominated: a lease probe, a parked-swap walk, and ledger/" +
-        "census reads, no content table scanned) - the first read an " +
-        "operator makes on an inherited warehouse costs the same at any " +
-        "corpus size. EMBEDDING/SEMDEDUP STORE-SIZE SLOPES are now " +
-        "measured too (StressProbe emb_size_*/sem_size_* tags, r18 box, " +
-        "warmed, broadcast disabled = the at-scale join regime; min of 3 " +
-        "ISOLATED JVM runs per point - running builds and both sizes' " +
-        "drops in ONE probe JVM inflated the drop walls ~8x with " +
-        "accumulated heap/GC state and masked the slope, so each point " +
-        "runs alone): the SAME 1,000-vector drop against a 100k-vec and " +
-        "a 500k-vec sign-LSH signature store costs 4.1s vs 4.9s - ratio " +
-        "1.20 for 5x the store, with band geometry following the store " +
-        "size (2^18 -> 2^20 buckets/band, the production discipline that " +
-        "pins per-bucket occupancy; the residual slope is the store's " +
-        "THIN columnar (band,code,vec_id) scan plus the vec-store stream " +
-        "on the verify side - sequential, shuffle-free, the documented " +
-        "store-sized term). The frozen-centroid SemDeDup drop against a " +
-        "100k (k=64) and a 500k (k=320) assignment store costs 1.8s vs " +
-        "2.0s - ratio 1.11 with k scaled to hold ~1.5k vecs/cluster (the " +
-        "paper's discipline; at FIXED k the candidate set provably " +
-        "tracks cluster occupancy instead - documented caveat, not a " +
-        "probe target). Per-point spread across runs reaches ~1.5x on " +
-        "this box, so treat both ratios as 'strongly sublinear', not as " +
-        "exact exponents. Both of the r17 design-only scale claims are " +
-        "measurements now: drop cost is bounded by the increment plus a " +
-        "thin-scan term, never by corpus-sized shuffles, for all three " +
-        "incremental store families. CONNECTED-COMPONENTS SLOPE measured " +
-        "(StressProbe cc_size_* tags, r19 box, min of 3 isolated JVMs per " +
-        "point, small untimed warm-up absorbing JIT): the same random-" +
-        "recursive-tree topology at 200k and 1M edges converges in 6 " +
-        "rounds at BOTH sizes (round count tracks diameter, which is " +
-        "log-shaped in this class and moves sub-integer across 5x) and " +
-        "walls 8.8s vs 14.8s - 1.68x for 5x the edges: per-round fixed " +
-        "scheduling dominates at these sizes and volume-per-round grows " +
-        "sublinearly, consistent with the O(log^2 n) shuffle-bounded " +
-        "design claim. REPAIR AT SCALE measured (gov_repair_* tags, all " +
-        "six repairable violation classes planted, fsck-repair-fsck " +
-        "cycle, min of 2 isolated JVMs per size): dirty fsck 2.0s at " +
-        "200k docs vs 3.6s at 1M (1.8x for 5x docs - same metadata-" +
-        "sized slope as the clean fsck probes), the HEAL itself 0.3s vs " +
-        "0.3s - FLAT: repair is driver-side renames/deletes plus a " +
-        "label rebuild that contracts the PAIR table (near-empty on the " +
-        "unique-doc probe corpus; pair-table-sized, never corpus-sized, " +
-        "by construction), and the post-heal clean fsck 1.6s vs 2.8s. " +
-        "The operator's worst-day path costs the same class of wall as " +
-        "a routine fsck at any corpus size. FSCK FLOOR DECOMPOSED (r20, " +
-        "small warm warehouse): ~0.16s driver-side plan build (presence/" +
-        "ledger/freshness probes + union assembly over ~15 tables; was " +
+        "label-store argmax scans plus id-sized joins. FSCK FLOOR " +
+        "DECOMPOSED (r20, small warm warehouse): ~0.16s driver-side " +
+        "plan build (presence/ledger/freshness probes + union assembly " +
+        "over ~15 tables; was " +
         "~0.25s before per-pass read memoization - several checks " +
         "consult the same commit table and each un-memoized read re-paid " +
         "the metadata probes and footer schema-infer), ~0.44s the one " +

@@ -65,7 +65,7 @@ object Backfill {
   def run(spark: SparkSession, pagesDir: String, warehouse: String,
           asOf: Option[java.sql.Timestamp] = None): Unit =
       // the market warehouse is single-writer like the corpus one: two
-      // concurrent sweeps would race the compaction/index swaps and
+      // concurrent sweeps would race the compaction and gold swaps and
       // double-land bars between each other's existence scans — the lease
       // turns that into a fail-fast (see core.WarehouseLease)
       graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
@@ -157,54 +157,24 @@ object Backfill {
     // compacted file covers a contiguous time slice of its series — an
     // incremental append is naturally time-local (each run lands the
     // [watermark, now) slice) and a hash-clustered compaction would smear
-    // the full history across every file, which is exactly what makes the
-    // per-file stats index below useless.
-    val silverPath = s"$warehouse/silver/bars"
+    // the full history across every file and row group, leaving parquet's
+    // t statistics nothing to skip.
     val nSeries = math.max(1L, silverAll.select(seriesKey.map(col): _*).distinct().count())
-    Sinks.compactIfFragmented(spark, silverPath, targetFiles = nSeries.toInt,
-      seriesKey, clusterCols = Seq("t"))
-
-    // data-skipping index for (ticker, time-box) reads — core/Layout's
-    // min/max-per-file table over the silver layout: ticker rides the
-    // partition DIRECTORY (constant per file, so its per-file min==max is a
-    // perfect equality pruner) and t is file-local by construction (append
-    // slices / clustered compaction), the degenerate-but-optimal form of
-    // the (ticker, day) Z-box — interleaving ticker into a Morton curve
-    // would WEAKEN its pruning from directory-exact to curve-approximate.
-    // Maintained INCREMENTALLY after every run: only files not yet
-    // indexed are scanned (an append run pays a columnar scan of the
-    // appended slice; a compaction run replaced every file, so the update
-    // degenerates to the full rebuild). readBarsBox is the consumer.
-    graft.core.Layout.updateFileStatsIndex(spark, silverPath,
-      barsIndexPath(warehouse), Seq("ticker", "t"))
+    Sinks.compactIfFragmented(spark, s"$warehouse/silver/bars",
+      targetFiles = nSeries.toInt, seriesKey, clusterCols = Seq("t"))
   }
 
-  private def barsIndexPath(warehouse: String) = s"$warehouse/silver/bars_index"
-
-  /** BOX READ over silver: all bars of `ticker` with t in [tFrom, tTo],
-    * reading ONLY the files whose (ticker, t) min/max box intersects the
-    * request (Layout.prunedRead over the index Backfill.run maintains) —
-    * at warehouse scale a point-ish read touches a handful of files
-    * instead of the ticker's full history, and row-identically equals the
-    * full-scan filter because the exact predicate is re-applied after the
-    * file-list decision. Falls back to the plain filtered scan when the
-    * index is absent or stale (file set drifted — e.g. a run died between
-    * the silver write and the index rewrite): a data-skipping index may
-    * only ever cost performance, never rows.
+  /** BOX READ over silver: all bars of `ticker` with t in [tFrom, tTo].
+    * A plain filtered parquet read: the ticker equality prunes to the
+    * ticker's partition directories at planning time, and the t range is
+    * pushed to the parquet reader, whose row-group min/max statistics skip
+    * what the request does not cover (time-local by construction: append
+    * slices and t-clustered compaction).
     */
   def readBarsBox(spark: SparkSession, warehouse: String, ticker: String,
-                  tFrom: Long, tTo: Long): org.apache.spark.sql.DataFrame = {
-    val silverPath = s"$warehouse/silver/bars"
-    val exact = col("ticker") === ticker && col("t").between(tFrom, tTo)
-    val idx = barsIndexPath(warehouse)
-    val fresh = Sinks.pathExists(spark, idx) && {
-      val indexed = spark.read.parquet(idx).count()
-      indexed == Sinks.dataFileCount(spark, silverPath)
-    }
-    if (!fresh) spark.read.parquet(silverPath).filter(exact)
-    else graft.core.Layout.prunedRead(spark, silverPath, idx,
-      Map("ticker" -> (ticker, ticker), "t" -> (tFrom, tTo)))
-  }
+                  tFrom: Long, tTo: Long): org.apache.spark.sql.DataFrame =
+    spark.read.parquet(s"$warehouse/silver/bars")
+      .filter(col("ticker") === ticker && col("t").between(tFrom, tTo))
 
   /** MARKET-warehouse integrity check — `CorpusIngest.fsck`'s silver-side
     * twin: one read-only audit of the invariants the backfill write paths
@@ -228,10 +198,6 @@ object Backfill {
     *     silver no longer holds — legal after a governance delete of
     *     silver rows (re-submission stays blocked, which a takedown
     *     wants), otherwise data loss; review.
-    *   - `stale_bars_index` (warn): the skipping index's file set drifted
-    *     from silver (run died between the silver write and the index
-    *     rewrite) — box reads fall back to full-scan filters (correct,
-    *     slower); the next `run` re-indexes.
     */
   def fsck(spark: SparkSession, warehouse: String): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
@@ -298,14 +264,6 @@ object Backfill {
             'watermark_ahead_of_data', '_watermarks', ahead, 'warn')
             AS (check, table, violations, severity)""")
       }
-      val idx = barsIndexPath(warehouse)
-      if (Sinks.pathExists(spark, idx))
-        frames += spark.read.parquet(idx)
-          .agg(abs(lit(Sinks.dataFileCount(spark, silverPath)) -
-            count(lit(1))).as("violations"))
-          .select(lit("stale_bars_index").as("check"),
-            lit("silver/bars_index").as("table"), col("violations"),
-            lit("warn").as("severity"))
     }
     val localDf = local.toSeq.toDF("check", "table", "violations", "severity")
     (frames :+ localDf).reduce(_ unionByName _)

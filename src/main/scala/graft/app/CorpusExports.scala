@@ -111,8 +111,7 @@ object CorpusExports {
     * the stated price of self-containment: an extended export stays a
     * first-class artifact that survives its base's expiry, and manifest
     * rows are thin ids (a billion-doc manifest is tens of GB, one
-    * bucketed write), so the copy never touches corpus bytes. Probe
-    * numbers in the bench notes (StressProbe export_* tags).
+    * bucketed write), so the copy never touches corpus bytes.
     */
   def extendExport(spark: SparkSession, warehouse: String,
                    baseExportTs: Long, asOfMs: Long,

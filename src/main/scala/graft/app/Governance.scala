@@ -439,8 +439,7 @@ object Governance {
     // plan, so the whole audit is ONE Spark job however many checks run.
     // The previous shape — an eager .count() per check — paid ~30 serial
     // job round-trips, which is pure scheduler latency on a large
-    // cluster where each check is a small co-located join (StressProbe
-    // warehouse_fsck prices the audit at probe scale).
+    // cluster where each check is a small co-located join.
     val frames = scala.collection.mutable.ArrayBuffer[DataFrame]()
     val local =
       scala.collection.mutable.ArrayBuffer[(String, String, Long, String)]()

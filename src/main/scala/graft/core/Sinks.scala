@@ -513,10 +513,10 @@ object Sinks {
     * rewrite — output tasks are range-partitioned and sorted on
     * (partitionCols ++ clusterCols) instead of hash-clustered on the
     * partition columns alone, so each rewritten file covers a contiguous
-    * clusterCols interval within its partition value. That is what makes a
-    * per-file min/max index (core/Layout) actually prune: a hash-clustered
-    * compaction smears e.g. the full time range across every file of a
-    * series and the index keeps everything.
+    * clusterCols interval within its partition value. That is what lets
+    * parquet's per-file and per-row-group min/max statistics skip data on
+    * a range filter: a hash-clustered compaction smears e.g. the full time
+    * range across every file of a series and the statistics skip nothing.
     */
   def compact(spark: SparkSession, path: String, targetFiles: Int,
               partitionCols: Seq[String] = Nil,

@@ -245,7 +245,15 @@ case class KmeansDistSq(left: Expression, right: Expression)
   *
   * Empty-buffer sentinel: dims is unknown until the first row, so the
   * zero buffer is the empty array and eval of an empty buffer is null
-  * (matches sum-over-no-rows semantics; callers always have rows).
+  * (matches sum-over-no-rows semantics; callers always have rows). A null
+  * vector is skipped like sum() skips a null; a zero-length vector is
+  * indistinguishable from no row and adds nothing.
+  *
+  * Ragged input fails loudly: vectors of different lengths in one group,
+  * met in `update` or across partial buffers in `merge`, throw instead of
+  * summing a prefix whose length would depend on which row came first. A
+  * null ELEMENT throws too, since there is no order-independent meaning
+  * for skipping one coordinate of a vector.
   */
 case class VecSumLong(child: Expression,
                       mutableAggBufferOffset: Int = 0,
@@ -256,18 +264,26 @@ case class VecSumLong(child: Expression,
 
   override def createAggregationBuffer(): Array[Long] = Array.emptyLongArray
 
+  private def requireSameLength(have: Int, got: Int): Unit =
+    if (have != got) throw new IllegalArgumentException(
+      s"graft_vec_sum: vectors of different lengths in one group ($have vs $got)")
+
   override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
     val v = child.eval(input)
     if (v == null) buffer
     else {
       val arr = v.asInstanceOf[ArrayData]
-      if (buffer.isEmpty) arr.toLongArray()
-      else {
-        val n = math.min(buffer.length, arr.numElements())
-        var i = 0
-        while (i < n) { buffer(i) += arr.getLong(i); i += 1 }
-        buffer
+      val n = arr.numElements()
+      val out = if (buffer.isEmpty) new Array[Long](n) else buffer
+      requireSameLength(out.length, n)
+      var i = 0
+      while (i < n) {
+        if (arr.isNullAt(i)) throw new IllegalArgumentException(
+          s"graft_vec_sum: null element at index $i")
+        out(i) += arr.getLong(i)
+        i += 1
       }
+      out
     }
   }
 
@@ -275,9 +291,9 @@ case class VecSumLong(child: Expression,
     if (b1.isEmpty) b2
     else if (b2.isEmpty) b1
     else {
-      val n = math.min(b1.length, b2.length)
+      requireSameLength(b1.length, b2.length)
       var i = 0
-      while (i < n) { b1(i) += b2(i); i += 1 }
+      while (i < b1.length) { b1(i) += b2(i); i += 1 }
       b1
     }
 

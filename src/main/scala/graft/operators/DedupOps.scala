@@ -993,10 +993,9 @@ object DedupOps {
     // SHUFFLE_HASH with the increment as build side: the bucketed store
     // satisfies the join's distribution off the scan (no exchange), and
     // the hash join streams it UNSORTED — a plain join would pick
-    // sort-merge and re-sort the corpus-sized store every drop, which the
-    // embedding twin's StressProbe measured costing more than the exchange
-    // bucketing removed. The build side is the increment, bounded by
-    // admission control.
+    // sort-merge and re-sort the corpus-sized store every drop, which on
+    // the embedding twin cost more than the exchange bucketing removed.
+    // The build side is the increment, bounded by admission control.
     val newOld = fresh.hint("shuffle_hash").as("a").join(
         storedBands.select(col("doc_id"), col("band"), col("sig")).as("b"),
         col("a.band") === col("b.band") && col("a.sig") === col("b.sig") &&

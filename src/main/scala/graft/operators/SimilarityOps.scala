@@ -234,11 +234,13 @@ object SimilarityOps {
     // per vector and paid TWO exchanges per round. Integer addition is
     // order-independent and the mean divides the same operands in the same
     // order ((double)Σvi[j] / n / 1e6), so the centroid trajectory is
-    // bit-identical to the exploded form's.
+    // bit-identical to the exploded form's. n counts the vectors the sum
+    // saw: graft_vec_sum skips a null vi, so counting rows would deflate
+    // the mean of any cluster a null embedding was assigned to.
     def update(assigned: DataFrame): DataFrame =
       assigned.join(v, "vec_id")
         .groupBy(col("cid"))
-        .agg(expr("graft_vec_sum(vi)").as("sx"), count(lit(1)).as("n"))
+        .agg(expr("graft_vec_sum(vi)").as("sx"), count(col("vi")).as("n"))
         .select(col("cid"),
           expr("transform(sx, x -> CAST(x AS DOUBLE) / n / 1000000D)").as("ce"))
 
@@ -990,8 +992,8 @@ object SimilarityOps {
     // join would then pick sort-merge and pay a full SORT of the
     // corpus-sized store per drop — the hash join streams the store
     // unsorted and hashes only the increment (bounded by admission
-    // control). Measured at the StressProbe scale: the SMJ sort cost more
-    // than the exchange it replaced; the hint removes both.
+    // control). The SMJ sort of the store costs more than the exchange
+    // bucketing removed; the hint removes both.
     val newOld = freshBands.hint("shuffle_hash").as("a").join(
         storedBands.select(col("vec_id"), col("band"), col("code")).as("b"),
         col("a.band") === col("b.band") && col("a.code") === col("b.code") &&

@@ -155,6 +155,20 @@ class FunctionsSpec extends AnyFunSuite {
       .groupBy(col("cid")).agg(expr("graft_vec_sum(vi)").as("sx"))
       .as[(Long, Seq[Long])].head()
     assert(withNull == ((0L, Seq(4L, 6L))))
+    // ragged vectors and null elements fail loudly instead of summing an
+    // order-dependent prefix
+    def refused(df: org.apache.spark.sql.DataFrame, what: String): Unit = {
+      val e = intercept[Exception](
+        df.groupBy(col("cid")).agg(expr("graft_vec_sum(vi)")).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => c.getMessage != null && c.getMessage.contains(what)), e)
+    }
+    val ragged = Seq((0L, Seq(1L, 2L)), (0L, Seq(3L)))
+    // one partition: the mismatch meets an update; two: a merge
+    refused(ragged.toDF("cid", "vi").coalesce(1), "different lengths")
+    refused(spark.sparkContext.parallelize(ragged, 2).toDF("cid", "vi"),
+      "different lengths")
+    refused(Seq((0L, Seq(Some(1L), None))).toDF("cid", "vi"), "null element")
   }
 
   test("sketch/band-code expressions reject bad arguments at analysis and tolerate null elements") {

@@ -131,6 +131,18 @@ class SimilaritySpec extends AnyFunSuite {
       s"inertia increased across rounds: $i1 -> $i2 -> $i3")
   }
 
+  test("kmeans update averages only non-null vectors") {
+    // k = 1: every vector, the null one included, lands in cluster 0, so
+    // after one round the centroid is the mean of the non-null vectors
+    val vecs = Seq((1L, Array(2f, 4f)), (2L, Array(4f, 8f)))
+    val withNull = vecs.map { case (i, e) => (i, Option(e)) } :+ ((3L, None))
+    def centroid(df: org.apache.spark.sql.DataFrame) =
+      graft.operators.SimilarityOps.kmeansCentroids(df, k = 1, iters = 1)
+        .select("ce").as[Seq[Double]].head()
+    assert(centroid(withNull.toDF("vec_id", "embedding")) == Seq(3.0, 6.0))
+    assert(centroid(vecs.toDF("vec_id", "embedding")) == Seq(3.0, 6.0))
+  }
+
   test("semDedup is exactly the cosine pair set restricted to shared clusters") {
     val emb = Tables.embeddings(spark, TestSpark.Sf0001)
     val exact = SimilarityOps.cosinePairs(emb, threshold = 0.42)

@@ -745,8 +745,8 @@ class SinksSpec extends AnyFunSuite {
     assert(findings().isEmpty, s"restored watermark must audit clean: ${findings()}")
 
     // a duplicate (series, t) silver row violates the idempotent-append
-    // contract — error; the extra un-indexed file also stales the index.
-    // Plant it file-level inside the leaf partition dir (silver is
+    // contract — error. Plant it file-level inside the leaf partition dir
+    // (silver is
     // partitioned by the series key; the duplicate bypasses the append's
     // existence check the way only corruption can)
     val silverRoot = new org.apache.hadoop.fs.Path(s"$wh/silver/bars")
@@ -762,8 +762,6 @@ class SinksSpec extends AnyFunSuite {
         spark.sparkContext.parallelize(one), leafDf.schema)
       .coalesce(1).write.mode("append").parquet(leaf.toString)
     assert(findings().contains(("silver_duplicate_keys", 1L, "error")),
-      s"${findings()}")
-    assert(findings().exists(f => f._1 == "stale_bars_index" && f._3 == "warn"),
       s"${findings()}")
   }
 
@@ -1202,36 +1200,39 @@ class SinksSpec extends AnyFunSuite {
       graft.app.Backfill.run(spark, pages.toString, wh)
     }
     val silver = s"$wh/silver/bars"
+    val day = 86400000L
+    // reference: every silver row, filtered on the driver
+    val all = spark.read.parquet(silver).collect().toSeq
+    def boxEqualsScan(tFrom: Long, tTo: Long): Long = {
+      val got = graft.app.Backfill.readBarsBox(spark, wh, "AAA", tFrom, tTo)
+        .collect().toSeq
+      val want = all.filter(r => r.getAs[String]("ticker") == "AAA" &&
+        r.getAs[Long]("t") >= tFrom && r.getAs[Long]("t") <= tTo)
+      assert(got.sortBy(_.toString) == want.sortBy(_.toString),
+        s"box [$tFrom, $tTo] must equal the full-scan filter row-for-row")
+      got.length.toLong
+    }
+    // days 1..2 whole; from inside day 1 to the gap after day 2; and a box
+    // lying wholly in the gap between two sweeps' slices
+    assert(boxEqualsScan(day, 3 * day - 1) == 8, "expected 2 days x 4 bars")
+    assert(boxEqualsScan(day + 2 * 60000L, 3 * day - 1) == 6)
+    assert(boxEqualsScan(day + 3600000L, 2 * day - 1) == 0)
+
+    // the ticker equality prunes partition directories: the executed scan
+    // opens only AAA's files, a strict subset of silver
+    val box = graft.app.Backfill.readBarsBox(spark, wh, "AAA", day, 3 * day - 1)
+    box.collect()
+    val plan = box.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
+      case p => p
+    }
+    val scan = plan.collectFirst {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+    }.getOrElse(fail(s"no file scan in\n$plan"))
+    val read = scan.metrics("numFiles").value
     val total = graft.core.Sinks.dataFileCount(spark, silver)
-    // the index tracks the live file set exactly (rewritten each run)
-    assert(spark.read.parquet(s"$wh/silver/bars_index").count() == total,
-      "stats index out of sync with the silver file set")
-
-    // one ticker, days 1..2 — the box must read a strict subset of files
-    val (kept, idxTotal) = graft.core.Layout.pruneStats(spark,
-      s"$wh/silver/bars_index",
-      Map("ticker" -> ("AAA", "AAA"), "t" -> (86400000L, 2 * 86400000L + 86399999L)))
-    assert(idxTotal == total)
-    assert(kept < total && kept > 0,
-      s"box read prunes nothing: kept $kept of $total files")
-
-    val box = graft.app.Backfill.readBarsBox(spark, wh, "AAA",
-      86400000L, 2 * 86400000L + 86399999L)
-    val want = spark.read.parquet(silver)
-      .filter(col("ticker") === "AAA" &&
-        col("t").between(86400000L, 2 * 86400000L + 86399999L))
-    assert(box.collect().toSet == want.collect().toSet,
-      "pruned box read must equal the full-scan filter row-for-row")
-    assert(box.count() == 8, s"expected 2 days × 4 bars, got ${box.count()}")
-
-    // stale-index safety: a file set drift (simulated by deleting the
-    // index) must fall back to the full scan, never drop rows
-    val fs = new org.apache.hadoop.fs.Path(s"$wh/silver/bars_index")
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$wh/silver/bars_index"), true)
-    assert(graft.app.Backfill.readBarsBox(spark, wh, "AAA",
-      86400000L, 2 * 86400000L + 86399999L).collect().toSet ==
-      want.collect().toSet, "index-less fallback must still be exact")
+    assert(read > 0 && read < total, s"box scan read $read of $total silver files")
   }
 
   test("clustered compaction keeps per-file time locality; hash compaction control smears it") {
@@ -1243,32 +1244,32 @@ class SinksSpec extends AnyFunSuite {
         .select(lit("AAA").as("ticker"), col("id").as("t"), (col("id") * 2).as("p"))
         .coalesce(1).write.mode("append").partitionBy("ticker").parquet(dir)
     }
+    // per-file t range, sorted by min
+    def fileRanges(): Seq[(Long, Long)] = spark.read.parquet(dir)
+      .groupBy(col("_metadata.file_path"))
+      .agg(min(col("t")), max(col("t")))
+      .collect().map(r => (r.getLong(1), r.getLong(2))).toSeq.sortBy(_._1)
     graft.core.Sinks.compact(spark, dir, targetFiles = 4,
       partitionCols = Seq("ticker"), clusterCols = Seq("t"))
-    val idx = java.nio.file.Files.createTempDirectory("compactc-idx").toString + "/i"
-    graft.core.Layout.writeFileStatsIndex(spark, dir, idx, Seq("t"))
     // each surviving file must cover a contiguous, non-overlapping t slice:
     // sorted by min, every file's min exceeds the previous file's max
-    val boxes = spark.read.parquet(idx)
-      .select(col("t__min").cast("long"), col("t__max").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    val boxes = fileRanges()
     assert(boxes.length >= 2, s"expected several files, got ${boxes.length}")
-    boxes.sliding(2).foreach { case Array(a, b) =>
+    boxes.sliding(2).foreach { case Seq(a, b) =>
       assert(b._1 > a._2, s"clustered files overlap in t: $a vs $b")
     }
-    // a mid-range box keeps a strict subset of files
-    val (kept, total) = graft.core.Layout.pruneStats(spark, idx,
-      Map("t" -> (500L, 700L)))
-    assert(kept < total, s"clustered compaction prunes nothing: $kept/$total")
+    // a mid-range box overlaps a strict subset of files
+    def overlapping(rs: Seq[(Long, Long)]) =
+      rs.count { case (lo, hi) => hi >= 500L && lo <= 700L }
+    assert(overlapping(boxes) < boxes.length,
+      s"clustered compaction leaves nothing to skip: $boxes")
     // control: the hash-clustered compaction leaves every file spanning
-    // ~everything — the box keeps all files, which is why clusterCols exist
+    // ~everything — the box overlaps all files, which is why clusterCols exist
     graft.core.Sinks.compact(spark, dir, targetFiles = 4,
       partitionCols = Seq("ticker"))
-    graft.core.Layout.writeFileStatsIndex(spark, dir, idx, Seq("t"))
-    val (keptH, totalH) = graft.core.Layout.pruneStats(spark, idx,
-      Map("t" -> (500L, 700L)))
-    assert(keptH == totalH,
-      s"hash control unexpectedly pruned ($keptH/$totalH) — assertion above is weak")
+    val hashed = fileRanges()
+    assert(overlapping(hashed) == hashed.length,
+      s"hash control unexpectedly time-local ($hashed) — assertion above is weak")
   }
 
   test("snapshot expiry drops old partitions, keeps the retained as-of window exact") {
@@ -1310,67 +1311,6 @@ class SinksSpec extends AnyFunSuite {
       olderThan = Some(ts("2030-01-01 00:00:00")))._2 == 1)
     assert(Sinks.latestSnapshot(spark, dir2).select("ticker")
       .as[String].head() == "MSFT")
-  }
-
-  test("incremental stats-index update scans only new files and tracks the live file set") {
-    val dir = Files.createTempDirectory("incidx").toString + "/t"
-    val idx = Files.createTempDirectory("incidx-i").toString + "/i"
-    // three appended slices, one file each — the incremental-append rhythm
-    (0 until 3).foreach { i =>
-      spark.range(i * 100L, (i + 1) * 100L)
-        .select(col("id").as("t"), (col("id") * 2).as("p"))
-        .coalesce(1).write.mode("append").parquet(dir)
-    }
-    // bootstrap: no index yet → full build
-    graft.core.Layout.updateFileStatsIndex(spark, dir, idx, Seq("t"))
-    assert(spark.read.parquet(idx).count() == Sinks.dataFileCount(spark, dir))
-
-    // POISON the indexed rows: shift min/max far out of the data's domain
-    // while keeping the file paths. Any rescan of an already-indexed file
-    // would repair its row, so surviving poison proves the update read
-    // only the new file.
-    val poisoned = spark.read.parquet(idx)
-      .withColumn("t__min", col("t__min") + 1000000L)
-      .withColumn("t__max", col("t__max") + 1000000L)
-    val rows = poisoned.collect()
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), poisoned.schema)
-      .coalesce(1).write.mode("overwrite").parquet(idx)
-
-    // append a fourth slice, update incrementally
-    spark.range(300L, 400L)
-      .select(col("id").as("t"), (col("id") * 2).as("p"))
-      .coalesce(1).write.mode("append").parquet(dir)
-    graft.core.Layout.updateFileStatsIndex(spark, dir, idx, Seq("t"))
-    val after = spark.read.parquet(idx).collect()
-    assert(after.length == 4, s"expected 4 indexed files, got ${after.length}")
-    assert(after.count(_.getAs[Long]("t__min") >= 1000000L) == 3,
-      "old files were rescanned — the update is not incremental")
-    val fresh = after.filter(_.getAs[Long]("t__min") < 1000000L)
-    assert(fresh.length == 1 && fresh.head.getAs[Long]("t__min") == 300L &&
-      fresh.head.getAs[Long]("t__max") == 399L,
-      "the new file's stats must be derived for real")
-
-    // an in-sync update is a no-op (and in particular never rescans)
-    graft.core.Layout.updateFileStatsIndex(spark, dir, idx, Seq("t"))
-    assert(spark.read.parquet(idx).filter(col("t__min") >= 1000000L).count() == 3)
-
-    // a compaction replaces EVERY file: vanished files' (poisoned) rows
-    // drop and everything re-derives — the update equals a fresh rebuild
-    Sinks.compact(spark, dir, targetFiles = 2, clusterCols = Seq("t"))
-    graft.core.Layout.updateFileStatsIndex(spark, dir, idx, Seq("t"))
-    val rebuilt = spark.read.parquet(idx)
-    assert(rebuilt.count() == Sinks.dataFileCount(spark, dir))
-    assert(rebuilt.filter(col("t__min") >= 1000000L).count() == 0,
-      "poison must vanish with its files")
-    val bounds = rebuilt.agg(min("t__min"), max("t__max")).head()
-    assert(bounds.getLong(0) == 0L && bounds.getLong(1) == 399L)
-
-    // column-set drift has no incremental meaning → rebuilt from scratch
-    graft.core.Layout.updateFileStatsIndex(spark, dir, idx, Seq("p"))
-    assert(spark.read.parquet(idx).columns.sorted.toSeq ==
-      Seq("file", "p__max", "p__min"))
-    val pb = spark.read.parquet(idx).agg(min("p__min"), max("p__max")).head()
-    assert(pb.getLong(0) == 0L && pb.getLong(1) == 798L)
   }
 
   test("idempotentAppend prunes its existence scan to the batch's partitions") {
@@ -1568,53 +1508,6 @@ class SinksSpec extends AnyFunSuite {
         buckets = 4)
       assert(spark.read.parquet(s"$dir/bands").count() == before)
     } finally olds.foreach { case (k, v) => spark.conf.set(k, v) }
-  }
-
-  test("z-order layout + file-stats index prune on EITHER column; single-sort control cannot") {
-    import graft.core.Layout
-    val dir = Files.createTempDirectory("zorder").toString
-    val rnd = new scala.util.Random(23)
-    // two independent uniform dims — the worst case for a single-column sort
-    val rows = Seq.tabulate(20000)(i =>
-      (i.toLong, rnd.nextInt(1000).toLong, rnd.nextInt(1000).toLong))
-    val df = rows.toDF("id", "a", "b").repartition(8)
-
-    Layout.writeZOrdered(df, s"$dir/z", Seq("a", "b"), numFiles = 16)
-    Layout.writeFileStatsIndex(spark, s"$dir/z", s"$dir/zidx", Seq("a", "b"))
-    // control: sorted by a alone — b spans ~[0,1000) inside every file
-    df.repartitionByRange(16, col("a")).sortWithinPartitions(col("a"))
-      .write.parquet(s"$dir/s")
-    Layout.writeFileStatsIndex(spark, s"$dir/s", s"$dir/sidx", Seq("a", "b"))
-
-    // box on BOTH dims: pruned read must equal the full-scan filter exactly
-    val box = Map("a" -> (100: Any, 199: Any), "b" -> (300: Any, 399: Any))
-    val got = Layout.prunedRead(spark, s"$dir/z", s"$dir/zidx", box)
-      .select("id").as[Long].collect().toSet
-    val want = df.filter(col("a").between(100, 199) &&
-      col("b").between(300, 399)).select("id").as[Long].collect().toSet
-    assert(got == want, s"pruned read diverged: ${got.size} vs ${want.size}")
-
-    val (zBoth, zTotal) = Layout.pruneStats(spark, s"$dir/zidx", box)
-    assert(zTotal == 16 && zBoth < zTotal,
-      s"a 10%x10% box should not touch every z file ($zBoth/$zTotal)")
-
-    // box on b ALONE — the dimension the control never sorted by
-    val bBox = Map("b" -> (300: Any, 349: Any))
-    val (zB, _) = Layout.pruneStats(spark, s"$dir/zidx", bBox)
-    val (sB, sTotal) = Layout.pruneStats(spark, s"$dir/sidx", bBox)
-    assert(sB == sTotal, "single-sort control should be unable to prune on b")
-    assert(zB < sB, s"z-order must prune a b-only box ($zB vs $sB/$sTotal)")
-    val gotB = Layout.prunedRead(spark, s"$dir/z", s"$dir/zidx", bBox)
-      .select("id").as[Long].collect().toSet
-    val wantB = df.filter(col("b").between(300, 349))
-      .select("id").as[Long].collect().toSet
-    assert(gotB == wantB)
-
-    // box outside the domain: zero files, empty frame, schema intact
-    val none = Layout.prunedRead(spark, s"$dir/z", s"$dir/zidx",
-      Map("a" -> (5000: Any, 6000: Any)))
-    assert(none.count() == 0 &&
-      none.columns.toSeq == Seq("id", "a", "b"))
   }
 
   test("manifestFiles resolves a compacted sink log like Spark's own reader") {

@@ -195,15 +195,33 @@ object SoakRaceMain {
           // the PAIR phase the holder is a LIVE contender, not a corpse:
           // the refusal must stay loud (logged once per drop) and the
           // loser retries into the next acquire — never silently
-          // proceeds, never dies.
+          // proceeds, never dies. A LeaseLostException (the heartbeat
+          // gap outran the TTL, e.g. under CPU starvation, and the body
+          // may have interleaved with the other writer) is retried the
+          // same way, within the same deadline: re-running the drop is
+          // the documented recovery, and every drop is a keyed no-op
+          // replay.
           val deadline = System.currentTimeMillis() + ttlMs.toLong * 10 + 30000L
           var acquired = false
+          var ran = false
           var refusalLogged = false
+          def retry(e: Exception): Unit = {
+            if (System.currentTimeMillis() > deadline) throw e
+            Thread.sleep(500L)
+          }
           while (!acquired) {
+            ran = false
             try {
               graft.core.WarehouseLease.withWriteLease(spark, warehouse,
                 ttlMs = ttlMs.toLong) {
-                applyDrop(spark, warehouse, k)
+                // re-read under the lease: the other pair writer may have
+                // finished this drop while we waited, and replaying it
+                // after its successors (e.g. an ingest after the delete
+                // that followed it) would undo their effects
+                if (!doneDrops(eventsFile).contains(k)) {
+                  applyDrop(spark, warehouse, k)
+                  ran = true
+                }
               }
               acquired = true
             } catch {
@@ -212,11 +230,13 @@ object SoakRaceMain {
                   logEvent(eventsFile, s"lease-held $k$writerId")
                   refusalLogged = true
                 }
-                if (System.currentTimeMillis() > deadline) throw e
-                Thread.sleep(500L)
+                retry(e)
+              case e: graft.core.WarehouseLease.LeaseLostException =>
+                logEvent(eventsFile, s"lease-lost $k$writerId")
+                retry(e)
             }
           }
-          logEvent(eventsFile, s"drop-done $k$writerId")
+          if (ran) logEvent(eventsFile, s"drop-done $k$writerId")
           // JVM-scoped coordination gauges ride the events file out —
           // (orphaned connects, skipped beats), WarehouseLease order
           logEvent(eventsFile, "gauges " + graft.core.WarehouseLease
