@@ -242,10 +242,8 @@ object Backfill {
         Sinks.pathExists(spark, graft.core.Watermarks.path(warehouse)) ||
         Sinks.pathExists(spark, graft.core.Watermarks.path(warehouse) + "_bak")
       val wm = graft.core.Watermarks.read(spark, warehouse)
-      val wmKeys = Seq("ticker", "timespan", "multiplier", "adjusted")
-        .filter(wm.columns.contains)
-      if (wmTableExists && wmKeys.nonEmpty &&
-          wmKeys.forall(silver.columns.contains)) {
+      val wmKeys = graft.core.Watermarks.keyCols
+      if (wmTableExists) {
         val dataMax = silver.groupBy(wmKeys.map(col): _*)
           .agg(max(col("t")).as("data_t"))
         def hit(c: org.apache.spark.sql.Column) =

@@ -72,14 +72,10 @@ object CorpusIngest {
 
   /** Land one drop; returns (new docs landed, new verified pairs).
     *
-    * `compactTargetFiles` sizes the signature-store maintenance pass: after
-    * the appends, `corpus/bands` and `corpus/shingles` are compacted down to
-    * that many files once fragmentation exceeds Sinks' shared 4× gate — a
-    * thousand-drop corpus otherwise pays a thousand file-opens per store
-    * read in every later increment. Defaults to the cluster parallelism.
-    * (For the bucketed store the target is its bucket count — one file per
-    * bucket is the ideal shape; compactTargetFiles then only sizes the
-    * staged-mirror maintenance.)
+    * After the appends, `corpus/bands` and `corpus/shingles` are compacted
+    * down to one file per bucket once fragmentation exceeds Sinks' shared
+    * 4× gate — a thousand-drop corpus otherwise pays a thousand file-opens
+    * per store read in every later increment.
     *
     * `storeBuckets` fixes the signature store's bucket layout at warehouse
     * creation (Sinks' spec ledger carries it ever after): bands bucket on
@@ -107,7 +103,6 @@ object CorpusIngest {
     */
   def run(spark: SparkSession, drop: DataFrame, warehouse: String,
           threshold: Double = 0.5,
-          compactTargetFiles: Option[Int] = None,
           storeBuckets: Int = 8,
           maxBucketCandidates: Option[Int] = None,
           hotBucketSalt: Int = 0): (Long, Long) =
@@ -116,12 +111,13 @@ object CorpusIngest {
       // this drop's increment and silently lose cross-drop pairs — the
       // lease turns that silent gap into a fail-fast (WarehouseLease doc)
       graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
-    // park-aware presence (storePresent, not raw pathExists): a crash-
+    // park-aware presence (keyedStorePresent, not raw pathExists): a crash-
     // parked shingle store read as ABSENT would silently take the
     // first-drop branch — no trim, batch pair derivation — and every
     // new-old pair against the existing corpus would be lost forever.
-    // Under the lease just taken, storePresent heals the park in-line.
-    val storeExists = Sinks.storePresent(spark, shinglePath(warehouse))
+    // Under the lease just taken, the park heals in-line, and so does an
+    // interrupted first create.
+    val storeExists = keyedStorePresent(spark, shinglePath(warehouse))
     // refuse to mix dedup thresholds in one pair table BEFORE any work: a
     // pair row carries no threshold, so appends under a different cut-off
     // would silently corrupt the cumulative table's semantics (the same
@@ -160,8 +156,7 @@ object CorpusIngest {
       val nNew = inc.count()
       if (nNew == 0) (0L, 0L)
       else landIncrement(spark, inc, nNew, warehouse, threshold,
-        compactTargetFiles, storeBuckets, storeExists, maxBucketCandidates,
-        hotBucketSalt)
+        storeBuckets, storeExists, maxBucketCandidates, hotBucketSalt)
     }
   }
 
@@ -170,7 +165,6 @@ object CorpusIngest {
     */
   private def landIncrement(spark: SparkSession, inc: DataFrame, nNew: Long,
                             warehouse: String, threshold: Double,
-                            compactTargetFiles: Option[Int],
                             storeBuckets: Int,
                             storeExists: Boolean,
                             maxBucketCandidates: Option[Int],
@@ -240,33 +234,18 @@ object CorpusIngest {
     // the trim and every keyed append above no-ops the rows that already
     // landed. Writing the trim key any earlier would strand a
     // half-ingested doc forever (trim skips it; its remaining rows never
-    // arrive). New warehouses get the bucketed store; a legacy plain
-    // store (exists, no spec ledger) keeps its layout — appending
-    // bucketed files into a plain directory would be silently
-    // meaningless. The gate inspects BOTH store tables, not a sibling
-    // proxy: a crash between the signature append's two table writes must
-    // re-enter the same branch on retry (an absent table counts as
-    // bucketed-ready; only a present PLAIN table forces the legacy path)
-    def plainStore(p: String) =
-      Sinks.storePresent(spark, p) && !Sinks.isBucketedStore(spark, p)
-    if (plainStore(bandPath(warehouse)) || plainStore(shinglePath(warehouse)))
-      DedupOps.appendSignatureStore(inc, bandPath(warehouse),
-        shinglePath(warehouse))
-    else
-      DedupOps.appendSignatureStoreBucketed(inc, bandPath(warehouse),
-        shinglePath(warehouse), buckets = storeBuckets)
+    // arrive). The band table is created first, so its create can be the
+    // one a crash cut: heal it before the append.
+    healTornCreate(spark, bandPath(warehouse))
+    DedupOps.appendSignatureStoreBucketed(inc, bandPath(warehouse),
+      shinglePath(warehouse), buckets = storeBuckets)
     // maintenance: every drop appends one file set to the signature store,
     // and the NEXT increment re-reads the whole store — the same
-    // fragmentation rhythm Backfill.run gates on for silver. Atomic swap,
-    // scan-identical data, so pairs already derived are unaffected. The
-    // bucketed store compacts through the bucketed writer (its target is
-    // the bucket count); the legacy store through the plain one.
-    val target = compactTargetFiles.getOrElse(
-      spark.sparkContext.defaultParallelism)
-    Seq(bandPath(warehouse), shinglePath(warehouse)).foreach { p =>
-      if (Sinks.isBucketedStore(spark, p)) Sinks.compactBucketedIfFragmented(spark, p)
-      else Sinks.compactIfFragmented(spark, p, target)
-    }
+    // fragmentation rhythm Backfill.run gates on for silver. Atomic swap
+    // through the bucketed writer (its target is the bucket count),
+    // scan-identical data, so pairs already derived are unaffected.
+    Seq(bandPath(warehouse), shinglePath(warehouse)).foreach(p =>
+      Sinks.compactBucketedIfFragmented(spark, p))
     (nNew, nPairs)
   }
 
@@ -280,7 +259,8 @@ object CorpusIngest {
     * table without the keyed rows: documents / shingles / bands /
     * doc_stats / staged_drops (the stream path's full-text mirror) on
     * doc_id, pairs on doc_a OR doc_b (chained anti-joins in ONE rewrite —
-    * Sinks.deleteByAnyKey). After the cascade a BATCH re-ingest of the
+    * Sinks.deleteBucketedByAnyKey), each through the bucketed writer so
+    * the store layout survives. After the cascade a BATCH re-ingest of the
     * doc_id lands as new and re-derives its pairs, because the trim reads
     * the same shingle store the cascade purged.
     *
@@ -310,15 +290,10 @@ object CorpusIngest {
       "doc_stats" -> statsPath(warehouse),
       "staged_drops" -> stagedPath(warehouse))
     val purged = byDocId.flatMap { case (name, p) =>
-      // park-aware (storePresent): a parked table read as absent would
+      // park-aware (keyedStorePresent): a parked table read as absent would
       // silently SKIP its purge — a takedown that leaves fingerprints
-      if (!Sinks.storePresent(spark, p)) None
-      // the signature store must be rewritten through the bucketed writer —
-      // a plain swap would strip the bucket-id file naming the catalog
-      // still promises, and later band joins would read a wrong layout
-      else if (Sinks.isBucketedStore(spark, p))
-        Some(name -> Sinks.deleteBucketedByKey(spark, p, keys, Seq("doc_id")))
-      else Some(name -> Sinks.deleteByKey(spark, p, keys, Seq("doc_id")))
+      if (!keyedStorePresent(spark, p)) None
+      else Some(name -> Sinks.deleteBucketedByKey(spark, p, keys, Seq("doc_id")))
     }.toMap
     // removed pair rows can SPLIT components — incremental merge cannot
     // express a split, so the label store is dropped here (every crash
@@ -335,11 +310,8 @@ object CorpusIngest {
     val tomb = Governance.tombstoneWithCounts(spark, tombPath(warehouse), keys,
       Seq("doc_id"))
     val all =
-      if (!Sinks.storePresent(spark, pairsPath(warehouse))) purged
-      else if (Sinks.isBucketedStore(spark, pairsPath(warehouse)))
-        purged + ("pairs" -> Sinks.deleteBucketedByAnyKey(spark,
-          pairsPath(warehouse), keys, "doc_id", Seq("doc_a", "doc_b")))
-      else purged + ("pairs" -> Sinks.deleteByAnyKey(spark,
+      if (!keyedStorePresent(spark, pairsPath(warehouse))) purged
+      else purged + ("pairs" -> Sinks.deleteBucketedByAnyKey(spark,
         pairsPath(warehouse), keys, "doc_id", Seq("doc_a", "doc_b")))
     rebuildLabels(spark, ccLabelsPath(warehouse), pairsPath(warehouse),
       "doc_a", "doc_b")
@@ -398,9 +370,7 @@ object CorpusIngest {
     * are computed fresh only for the increment
     * (SimilarityOps.cosinePairsLshIncremental); the store sides of the
     * candidate and verify joins are bucketed on (band, code) / vec_id and
-    * plan no exchange; old vectors are never re-projected. The embedding
-    * store is always bucketed — the table family is new, so there is no
-    * legacy-plain-layout fallback to honor.
+    * plan no exchange; old vectors are never re-projected.
     *
     * `trainedCentroids` opts the drop into SEMDEDUP maintenance: the
     * increment is assigned once against the supplied FROZEN centroids
@@ -422,8 +392,9 @@ object CorpusIngest {
                        hotBucketSalt: Int = 0): (Long, Long) =
       graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
     // park-aware like run(): a parked vec store must not flip this drop
-    // into the first-drop branch (all new-old pairs lost)
-    val storeExists = Sinks.storePresent(spark, embVecsPath(warehouse))
+    // into the first-drop branch (all new-old pairs lost); an interrupted
+    // first create heals like run()'s
+    val storeExists = keyedStorePresent(spark, embVecsPath(warehouse))
     checkThresholdAt(spark, embPairsPath(warehouse), "corpus/emb_pairs",
       threshold)
     // SemDeDup COVERAGE is refused-before-work like every other contract
@@ -433,7 +404,7 @@ object CorpusIngest {
     // never assigned — run retrainSemStore first to cover them. (2) A
     // sem-maintained warehouse receiving a drop WITHOUT centroids — that
     // drop's vectors would never enter sem_asg.
-    val semAsgExists = Sinks.storePresent(spark, semAsgPath(warehouse))
+    val semAsgExists = keyedStorePresent(spark, semAsgPath(warehouse))
     if (trainedCentroids.isDefined) {
       require(semAsgExists || !storeExists,
         s"ingestEmbeddings: ${semAsgPath(warehouse)} is missing but the " +
@@ -512,7 +483,7 @@ object CorpusIngest {
         // on retry and these keyed appends no-op what already landed.
         trainedCentroids.foreach { cents =>
           val storedAsg =
-            if (Sinks.storePresent(spark, semAsgPath(warehouse)))
+            if (semAsgExists)
               readStore(spark, semAsgPath(warehouse))
             // first drop: an empty store with the right schema — the
             // incremental path then derives new-new pairs only
@@ -544,10 +515,12 @@ object CorpusIngest {
           if (!semPairs.isEmpty)
             updateLabels(spark, semCcPath(warehouse), semPairsPath(warehouse),
               semPairs, "vec_a", "vec_b", storeBuckets)
-          Sinks.bucketedIdempotentAppend(freshAsg, semAsgPath(warehouse),
-            keys = Seq("cid", "vec_id"), bucketKeys = Seq("cid"),
-            buckets = storeBuckets)
+          appendKeyedStore(spark, freshAsg, semAsgPath(warehouse),
+            storeBuckets, keys = Seq("cid", "vec_id"), bucketKeys = Seq("cid"))
         }
+        // the band table is created first, so its create can be the one a
+        // crash cut (as in run())
+        healTornCreate(spark, embBandsPath(warehouse))
         graft.operators.SimilarityOps.appendEmbSignatureStoreBucketed(inc,
           embBandsPath(warehouse), embVecsPath(warehouse),
           buckets = storeBuckets)
@@ -585,10 +558,8 @@ object CorpusIngest {
       "sem_asg" -> semAsgPath(warehouse),
       "staged_emb_drops" -> stagedEmbPath(warehouse))
     val purged = byVecId.flatMap { case (name, p) =>
-      if (!Sinks.storePresent(spark, p)) None
-      else if (Sinks.isBucketedStore(spark, p))
-        Some(name -> Sinks.deleteBucketedByKey(spark, p, keys, Seq("vec_id")))
-      else Some(name -> Sinks.deleteByKey(spark, p, keys, Seq("vec_id")))
+      if (!keyedStorePresent(spark, p)) None
+      else Some(name -> Sinks.deleteBucketedByKey(spark, p, keys, Seq("vec_id")))
     }.toMap
     val tomb = Governance.tombstoneWithCounts(spark, embTombPath(warehouse), keys,
       Seq("vec_id"))
@@ -601,11 +572,8 @@ object CorpusIngest {
       "emb_pairs" -> embPairsPath(warehouse),
       "sem_pairs" -> semPairsPath(warehouse))
     val all = purged ++ pairTables.flatMap { case (name, p) =>
-      if (!Sinks.storePresent(spark, p)) None
-      else if (Sinks.isBucketedStore(spark, p))
-        Some(name -> Sinks.deleteBucketedByAnyKey(spark, p, keys, "vec_id",
-          Seq("vec_a", "vec_b")))
-      else Some(name -> Sinks.deleteByAnyKey(spark, p, keys, "vec_id",
+      if (!keyedStorePresent(spark, p)) None
+      else Some(name -> Sinks.deleteBucketedByAnyKey(spark, p, keys, "vec_id",
         Seq("vec_a", "vec_b")))
     }
     rebuildLabels(spark, embCcPath(warehouse), embPairsPath(warehouse),
@@ -792,7 +760,6 @@ object CorpusIngest {
     */
   def promoteAndIngest(spark: SparkSession, landingPath: String,
                        warehouse: String, threshold: Double = 0.5,
-                       compactTargetFiles: Option[Int] = None,
                        storeBuckets: Int = 8,
                        maxBucketCandidates: Option[Int] = None,
                        hotBucketSalt: Int = 0): (Long, Long) =
@@ -801,10 +768,9 @@ object CorpusIngest {
     // run() re-enters the same JVM lease at depth 2
     graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
       promoteAndIngestVia(spark, landingPath, stagedPath(warehouse),
-        tombPath(warehouse), "doc_id", storeBuckets, compactTargetFiles,
-        staged => run(spark, staged, warehouse, threshold,
-          compactTargetFiles, storeBuckets, maxBucketCandidates,
-          hotBucketSalt))
+        tombPath(warehouse), "doc_id", storeBuckets,
+        staged => run(spark, staged, warehouse, threshold, storeBuckets,
+          maxBucketCandidates, hotBucketSalt))
     }
 
   /** `promoteAndIngest` for the EMBEDDING modality — the batch half of
@@ -817,7 +783,6 @@ object CorpusIngest {
     */
   def promoteAndIngestEmbeddings(spark: SparkSession, landingPath: String,
                                  warehouse: String, threshold: Double = 0.42,
-                                 compactTargetFiles: Option[Int] = None,
                                  storeBuckets: Int = 8,
                                  trainedCentroids: Option[DataFrame] = None,
                                  semThreshold: Double = 0.9,
@@ -826,7 +791,7 @@ object CorpusIngest {
       : (Long, Long) =
     graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
       promoteAndIngestVia(spark, landingPath, stagedEmbPath(warehouse),
-        embTombPath(warehouse), "vec_id", storeBuckets, compactTargetFiles,
+        embTombPath(warehouse), "vec_id", storeBuckets,
         staged => ingestEmbeddings(spark, staged, warehouse, threshold,
           storeBuckets, trainedCentroids, semThreshold, maxBucketCandidates,
           hotBucketSalt))
@@ -838,7 +803,6 @@ object CorpusIngest {
     */
   def promoteAndIngestMedia(spark: SparkSession, landingPath: String,
                             warehouse: String, maxHamming: Int = 3,
-                            compactTargetFiles: Option[Int] = None,
                             storeBuckets: Int = 8,
                             maxBucketCandidates: Option[Int] = None,
                             hotBucketSalt: Int = 0)
@@ -846,7 +810,6 @@ object CorpusIngest {
     graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
       promoteAndIngestVia(spark, landingPath, stagedMediaPath(warehouse),
         mediaTombPath(warehouse), "media_id", storeBuckets,
-        compactTargetFiles,
         staged => ingestMedia(spark, staged, warehouse, maxHamming,
           storeBuckets, maxBucketCandidates, hotBucketSalt))
     }
@@ -859,7 +822,6 @@ object CorpusIngest {
   private def promoteAndIngestVia(spark: SparkSession, landingPath: String,
                                   staged: String, tombs: String,
                                   keyCol: String, storeBuckets: Int,
-                                  compactTargetFiles: Option[Int],
                                   ingest: DataFrame => (Long, Long))
       : (Long, Long) = {
     // a maintenance cadence can legitimately fire before the landing's
@@ -871,13 +833,10 @@ object CorpusIngest {
     // the staged mirror is cumulative and key-keyed like the modality's
     // main table: bucketed, each promotion's existence anti-join AND the
     // ingest trim below are co-located on the bucket layout instead of
-    // re-shuffling the mirror; a legacy plain mirror keeps its layout
-    val stagedSpec =
-      if (Sinks.isBucketedStore(spark, staged) || !Sinks.storePresent(spark, staged))
-        Some(Seq(keyCol) -> storeBuckets)
-      else None
+    // re-shuffling the mirror
+    healTornCreate(spark, staged)
     Sinks.promote(spark, landingPath, staged, keys = Seq(keyCol),
-      bucketSpec = stagedSpec)
+      bucketSpec = Some(Seq(keyCol) -> storeBuckets))
     if (!Sinks.storePresent(spark, staged)) return (0L, 0L)
     val promotedUpto = readLongLedger(spark, staged + "._promoted_upto")
     val ingLedger = staged + "._ingested_upto"
@@ -887,20 +846,15 @@ object CorpusIngest {
     // delete is existence-probed, so a clean staged table costs one probe
     if (Sinks.storePresent(spark, tombs)) {
       Sinks.freshenIfRewritten(spark, tombs)
-      val t = spark.read.parquet(tombs)
-      if (Sinks.isBucketedStore(spark, staged))
-        Sinks.deleteBucketedByKey(spark, staged, t, Seq(keyCol))
-      else Sinks.deleteByKey(spark, staged, t, Seq(keyCol))
+      Sinks.deleteBucketedByKey(spark, staged, spark.read.parquet(tombs),
+        Seq(keyCol))
     }
     val res = ingest(readStore(spark, staged))
     writeLongLedger(spark, ingLedger, promotedUpto)
     // the staged mirror fragments one file set per promotion like the
     // signature store; same gate, and both sibling ledgers survive the
     // swap (they sit beside the table dir, not inside it)
-    if (Sinks.isBucketedStore(spark, staged))
-      Sinks.compactBucketedIfFragmented(spark, staged)
-    else Sinks.compactIfFragmented(spark, staged,
-      compactTargetFiles.getOrElse(spark.sparkContext.defaultParallelism))
+    Sinks.compactBucketedIfFragmented(spark, staged)
     res
   }
 
@@ -956,8 +910,9 @@ object CorpusIngest {
                   hotBucketSalt: Int = 0): (Long, Long) =
       graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
     // park-aware like run(): a parked hash store must not flip this drop
-    // into the first-drop branch
-    val storeExists = Sinks.storePresent(spark, mediaHashPath(warehouse))
+    // into the first-drop branch; an interrupted first create heals like
+    // run()'s
+    val storeExists = keyedStorePresent(spark, mediaHashPath(warehouse))
     checkThresholdAt(spark, mediaPairsPath(warehouse), "corpus/media_pairs",
       maxHamming.toDouble)
     // band-store geometry ledger too (chunk count = maxHamming + 1): the
@@ -1022,12 +977,11 @@ object CorpusIngest {
             storeBuckets)
         // bands before the hash commit point; same prefix-keyed
         // exchange-free existence check as appendPhashStoreBucketed
-        Sinks.bucketedIdempotentAppend(freshBands, mediaBandsPath(warehouse),
-          keys = Seq("ci", "chunk", "media_id"),
-          bucketKeys = Seq("ci", "chunk"), buckets = storeBuckets)
-        Sinks.bucketedIdempotentAppend(hashes, mediaHashPath(warehouse),
-          keys = Seq("media_id"), bucketKeys = Seq("media_id"),
-          buckets = storeBuckets)
+        appendKeyedStore(spark, freshBands, mediaBandsPath(warehouse),
+          storeBuckets, keys = Seq("ci", "chunk", "media_id"),
+          bucketKeys = Seq("ci", "chunk"))
+        appendKeyedStore(spark, hashes, mediaHashPath(warehouse),
+          storeBuckets, keys = Seq("media_id"))
         Seq(mediaBandsPath(warehouse), mediaHashPath(warehouse)).foreach(p =>
           Sinks.compactBucketedIfFragmented(spark, p))
         (nNew, nPairs)
@@ -1054,21 +1008,15 @@ object CorpusIngest {
       "media_bands" -> mediaBandsPath(warehouse),
       "staged_media_drops" -> stagedMediaPath(warehouse))
     val purged = byId.flatMap { case (name, p) =>
-      if (!Sinks.storePresent(spark, p)) None
-      else if (Sinks.isBucketedStore(spark, p))
-        Some(name -> Sinks.deleteBucketedByKey(spark, p, keys, Seq("media_id")))
-      else Some(name -> Sinks.deleteByKey(spark, p, keys, Seq("media_id")))
+      if (!keyedStorePresent(spark, p)) None
+      else Some(name -> Sinks.deleteBucketedByKey(spark, p, keys, Seq("media_id")))
     }.toMap
     val tomb = Governance.tombstoneWithCounts(spark, mediaTombPath(warehouse), keys,
       Seq("media_id"))
     dropStore(spark, mediaCcPath(warehouse))
     val all =
-      if (!Sinks.storePresent(spark, mediaPairsPath(warehouse))) purged
-      else if (Sinks.isBucketedStore(spark, mediaPairsPath(warehouse)))
-        purged + ("media_pairs" -> Sinks.deleteBucketedByAnyKey(spark,
-          mediaPairsPath(warehouse), keys, "media_id",
-          Seq("media_a", "media_b")))
-      else purged + ("media_pairs" -> Sinks.deleteByAnyKey(spark,
+      if (!keyedStorePresent(spark, mediaPairsPath(warehouse))) purged
+      else purged + ("media_pairs" -> Sinks.deleteBucketedByAnyKey(spark,
         mediaPairsPath(warehouse), keys, "media_id",
         Seq("media_a", "media_b")))
     rebuildLabels(spark, mediaCcPath(warehouse), mediaPairsPath(warehouse),
@@ -1137,7 +1085,7 @@ object CorpusIngest {
                       iters: Int = 3, semThreshold: Double = 0.9,
                       storeBuckets: Int = 8): DataFrame =
       graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
-    require(Sinks.storePresent(spark, embVecsPath(warehouse)),
+    require(keyedStorePresent(spark, embVecsPath(warehouse)),
       s"retrainSemStore: no vector store at ${embVecsPath(warehouse)} — " +
         "ingest embeddings first")
     dropStore(spark, semAsgPath(warehouse))
@@ -1177,9 +1125,8 @@ object CorpusIngest {
       updateLabels(spark, semCcPath(warehouse), semPairsPath(warehouse),
         asg.limit(0).select(col("vec_id").as("vec_a"),
           col("vec_id").as("vec_b")), "vec_a", "vec_b", storeBuckets)
-      Sinks.bucketedIdempotentAppend(asg, semAsgPath(warehouse),
-        keys = Seq("cid", "vec_id"), bucketKeys = Seq("cid"),
-        buckets = storeBuckets)
+      appendKeyedStore(spark, asg, semAsgPath(warehouse), storeBuckets,
+        keys = Seq("cid", "vec_id"), bucketKeys = Seq("cid"))
       cents
     }
   }
@@ -1203,8 +1150,8 @@ object CorpusIngest {
     * cluster over the CUMULATIVE pair table. Losers come off the
     * incrementally-maintained label store when present — a co-located
     * argmax scan plus one anti-join shipping loser ids; the full-graph
-    * contraction runs only as the fallback (legacy warehouses, or right
-    * after a governance delete dropped the store).
+    * contraction runs only as the fallback (no drop has derived a pair
+    * yet, or a crash cut the label store's create).
     */
   def survivors(spark: SparkSession, warehouse: String): DataFrame = {
     val docs = readStore(spark, docsPath(warehouse))

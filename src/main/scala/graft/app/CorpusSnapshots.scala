@@ -59,17 +59,15 @@ object CorpusSnapshots {
   def snapshotCorpus(spark: SparkSession, warehouse: String,
                      atMs: Option[Long] = None): Long =
       graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
-    require(Sinks.storePresent(spark, docsPath(warehouse)),
+    require(keyedStorePresent(spark, docsPath(warehouse)),
       s"snapshotCorpus: no document store at ${docsPath(warehouse)} — " +
         "ingest first")
     val (prior, _) = scanSnapshots(spark, warehouse)
     val ts = nextStamp(prior, atMs, "snapshotCorpus")
     val dir = snapDirOf(warehouse, ts)
-    // manifest bucket layout mirrors the document store's so the as-of
-    // semi-join co-locates; a legacy plain docs store gets the default
-    // geometry (the join then shuffles the manifest — the small side)
-    val buckets = Sinks.bucketSpecOf(spark, docsPath(warehouse))
-      .map(_._2).getOrElse(8)
+    // manifest bucket layout mirrors the document store's (present, hence
+    // bucketed) so the as-of semi-join co-locates
+    val (_, buckets) = Sinks.bucketSpecOf(spark, docsPath(warehouse)).get
     Sinks.bucketedIdempotentAppend(
       Governance.curatedSurvivors(spark, warehouse).select(col("doc_id")),
       dir, keys = Seq("doc_id"), bucketKeys = Seq("doc_id"),

@@ -34,46 +34,71 @@ private[graft] object CorpusStore {
 
   def cappedPath(wh: String) = s"$wh/corpus/capped_buckets"
 
-  /** The signature store reads through its bucketed catalog registration
-    * when it has one — that scan is what lets the incremental band/verify
-    * joins keep the corpus side exchange-free. Legacy (pre-bucketing)
-    * warehouses fall back to the plain parquet read and keep working, just
-    * without the elision.
+  /** ONE layout rule for every keyed corpus table (documents, doc_stats,
+    * shingles, bands, pairs, the staged mirrors, the emb/sem/media stores,
+    * the label stores): it is a bucketed store with a `._bucketspec`
+    * ledger, and a directory WITHOUT that ledger is an interrupted first
+    * create. `Sinks.bucketedIdempotentAppend` stamps the ledger only after
+    * its first files commit, and no later append succeeds without it, so
+    * such a directory holds only the rows of the one operation that never
+    * committed — its retry lands them again. A writer holding the
+    * warehouse lease clears the directory (siblings like `._params` and
+    * `._threshold` stay: they are stamped first on purpose), so the retry
+    * recreates the table bucketed. Without the lease nothing is touched —
+    * the directory may be a live writer's in-flight create — and
+    * [[readStore]] gives the torn-create verdict.
     */
-  def readStore(spark: SparkSession, path: String): DataFrame =
-    if (Sinks.isBucketedStore(spark, path)) Sinks.readBucketedPath(spark, path)
-    else {
-      // same cross-driver staleness guard as the bucketed branch gets
-      // inside readBucketedPath: plain parquet reads share the session
-      // FileStatusCache, which a foreign writer's rewrite also strands
-      Sinks.freshenIfRewritten(spark, path)
-      // torn store create (Sinks.hasCommittedDataFiles doc): resolve the
-      // bare-directory crash state to a DOCUMENTED verdict instead of
-      // parquet's cryptic UNABLE_TO_INFER_SCHEMA — same loud-and-
-      // actionable style as the mid-swap/crash-parked reader verdicts
-      if (!Sinks.hasCommittedDataFiles(spark, path))
-        throw new IllegalStateException(
-          s"$path: torn store create — the directory exists but holds no " +
-            "committed data files (a writer died between creating it and " +
-            "its first task commit). The owning drop's retry rebuilds it; " +
-            "retry this read after the next ingest, or dropStore the residue.")
-      spark.read.parquet(path)
+  def healTornCreate(spark: SparkSession, path: String): Unit =
+    if (graft.core.WarehouseLease.heldByCurrentThread(spark, path) &&
+        Sinks.pathExists(spark, path) && !Sinks.isBucketedStore(spark, path)) {
+      val p = new org.apache.hadoop.fs.Path(path)
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
     }
 
-  /** Keyed idempotent append into a cumulative warehouse table: bucketed
-    * on the key for new warehouses (and ones already bucketed), so the
-    * per-drop existence anti-join never re-shuffles the table side; legacy
-    * plain tables keep their layout and the plain append. EVERY cumulative
-    * append in this file dispatches through here — the
-    * bucketed-if-ledger-or-fresh-else-legacy rule must not fork per site.
+  /** Park-aware presence (`Sinks.storePresent`) of a keyed corpus table
+    * after [[healTornCreate]]: under the lease an interrupted first create
+    * reads ABSENT, so the caller takes its first-create branch.
+    */
+  def keyedStorePresent(spark: SparkSession, path: String): Boolean = {
+    healTornCreate(spark, path)
+    Sinks.storePresent(spark, path)
+  }
+
+  /** The bucketed scan of a keyed corpus table — the scan that lets the
+    * incremental band/verify joins keep the corpus side exchange-free. A
+    * directory without its spec ledger is an interrupted first create
+    * ([[healTornCreate]]): the documented torn-create verdict, never a
+    * plain read of a partial table. An absent table fails like parquet's
+    * own read of a missing path.
+    */
+  def readStore(spark: SparkSession, path: String): DataFrame = {
+    if (!Sinks.isBucketedStore(spark, path)) {
+      if (!Sinks.pathExists(spark, path))
+        throw new org.apache.spark.sql.AnalysisException("PATH_NOT_FOUND",
+          Map("path" -> path))
+      throw new IllegalStateException(
+        s"$path: torn store create — the directory exists but has no " +
+          "._bucketspec ledger (a writer died before its first create " +
+          "committed). The owning drop's retry rebuilds it; retry this " +
+          "read after the next ingest, or dropStore the residue.")
+    }
+    Sinks.readBucketedPath(spark, path)
+  }
+
+  /** Keyed idempotent append into a keyed corpus table, bucketed on
+    * `bucketKeys` (default: the keys), so the per-drop existence anti-join
+    * never re-shuffles the table side. An interrupted first create is
+    * healed before the append ([[healTornCreate]]).
     */
   def appendKeyedStore(spark: SparkSession, df: DataFrame,
                                path: String, buckets: Int,
-                               keys: Seq[String] = Seq("doc_id")): Unit =
-    if (Sinks.isBucketedStore(spark, path) || !Sinks.storePresent(spark, path))
-      Sinks.bucketedIdempotentAppend(df, path, keys = keys,
-        bucketKeys = keys, buckets = buckets)
-    else Sinks.idempotentAppend(df, path, keys = keys, partitionCols = Nil)
+                               keys: Seq[String] = Seq("doc_id"),
+                               bucketKeys: Seq[String] = Nil): Unit = {
+    healTornCreate(spark, path)
+    Sinks.bucketedIdempotentAppend(df, path, keys = keys,
+      bucketKeys = if (bucketKeys.isEmpty) keys else bucketKeys,
+      buckets = buckets)
+  }
 
   // ---------------- incremental component label stores ----------------
   //
@@ -116,13 +141,8 @@ private[graft] object CorpusStore {
                            pairsP: String, newPairs: DataFrame,
                            aCol: String, bCol: String,
                            buckets: Int): Unit = {
+    healTornCreate(spark, labelPath)
     val exists = Sinks.isBucketedStore(spark, labelPath)
-    // a label directory WITHOUT its spec ledger is torn-create residue
-    // (the ledger is stamped after the initial write commits) — clear it
-    // so the recreate below can land; label stores are always bucketed,
-    // so there is no legacy-plain layout this could misread
-    if (!exists && Sinks.pathExists(spark, labelPath))
-      dropStore(spark, labelPath)
     val changed =
       if (!exists)
         Components.connectedComponents(
@@ -168,8 +188,8 @@ private[graft] object CorpusStore {
                             pairsP: String, aCol: String,
                             bCol: String): Unit = {
     dropStore(spark, labelPath)
-    if (Sinks.storePresent(spark, pairsP)) {
-      val buckets = Sinks.bucketSpecOf(spark, pairsP).map(_._2).getOrElse(8)
+    if (keyedStorePresent(spark, pairsP)) {
+      val (_, buckets) = Sinks.bucketSpecOf(spark, pairsP).get
       val labels = Components.connectedComponents(
         readStore(spark, pairsP).select(col(aCol), col(bCol)))
       Sinks.bucketedIdempotentAppend(labels.withColumn("seq", lit(0L)),
@@ -199,9 +219,10 @@ private[graft] object CorpusStore {
 
   /** Loser ids (component non-minima) for a pair table: from the label
     * store's current view when one is maintained — a co-located scan —
-    * or the full-graph recompute otherwise (legacy warehouses, and any
-    * crash window where a store create was torn before its ledger). The
-    * ledger gate means a torn create can never serve a partial labeling.
+    * or the full-graph recompute otherwise (no drop has derived a pair
+    * yet, or a crash window where a store create was torn before its
+    * ledger). The ledger gate means a torn create can never serve a
+    * partial labeling.
     */
   def losersFor(spark: SparkSession, labelPath: String,
                         pairsP: String, aCol: String, bCol: String,

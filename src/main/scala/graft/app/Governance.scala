@@ -102,7 +102,8 @@ object Governance {
     * number — same-millisecond events stay ordered, which `at_ms` alone
     * cannot promise. It comes off a sibling ledger (stamp-first, race-free
     * because every writer holds the warehouse lease); the full-log
-    * max-scan runs only once, on a legacy log that predates the ledger. Plain event-log append, deliberately NOT keyed: a
+    * max-scan runs only when that ledger is absent or unreadable. Plain
+    * event-log append, deliberately NOT keyed: a
     * crash-retried cascade logs twice, which is the truthful record (the
     * cascade ran twice — idempotently). Each cascade writes its audit
     * rows LAST, so a crash mid-cascade under-reports (the retry re-logs)
@@ -112,18 +113,9 @@ object Governance {
     * log is thin and lives outside the content tables — `fsck` and the
     * views never read it.
     */
-  /** The audit log with the `seq` column GUARANTEED present: a log whose
-    * earliest files predate the seq column (legacy-warehouse contract —
-    * same tolerance as readStore's plain fallback) reads those rows as
-    * seq = -1, so appends keep numbering from 0 and the compliance read
-    * orders legacy rows by timestamp beneath every numbered event.
-    */
-  private[app] def readAudit(spark: SparkSession, warehouse: String): DataFrame = {
-    val log = spark.read.option("mergeSchema", "true")
-      .parquet(auditPath(warehouse))
-    if (!log.columns.contains("seq")) log.withColumn("seq", lit(-1L))
-    else log.withColumn("seq", coalesce(col("seq"), lit(-1L)))
-  }
+  /** The audit log: a plain parquet event table, every row numbered. */
+  private[app] def readAudit(spark: SparkSession, warehouse: String): DataFrame =
+    spark.read.parquet(auditPath(warehouse))
 
   /** Sibling ledger holding the LAST USED audit seq — the metadata-read
     * that replaces scanning the whole (compacted, but unbounded) event log
@@ -138,7 +130,7 @@ object Governance {
     if (entries.nonEmpty) {
       import spark.implicits._
       val at = System.currentTimeMillis()
-      // park-aware presence gate on EVERY branch, not only the legacy
+      // park-aware presence gate on EVERY branch, not only the
       // ledger==-1 fallback: the log is compactable (swapInto), so a crash
       // between its two renames parks it at ._compact_old. With the seq
       // ledger present, a plain Append would recreate the live directory
@@ -147,10 +139,10 @@ object Governance {
       // a later compaction's stage-out rename would collide with. Leased
       // callers (all of them) heal the park in-line here.
       val logPresent = Sinks.storePresent(spark, auditPath(warehouse))
-      // last used seq: the ledger when present; one full-log scan only on
-      // a legacy warehouse whose log predates the ledger (or a torn
-      // ledger write — unreadable = re-derive, never skip). Race-free:
-      // every governance writer holds the warehouse lease.
+      // last used seq: the ledger when present; one full-log scan only
+      // when it is absent or unreadable (a torn ledger write — unreadable
+      // = re-derive, never skip). Race-free: every governance writer
+      // holds the warehouse lease.
       val last = readLongLedger(spark, auditSeqLedger(warehouse)) match {
         case -1L =>
           if (!logPresent) -1L
@@ -426,7 +418,10 @@ object Governance {
         // to COMPLETE on a torn warehouse, never to crash on one
         None
       else {
-        // cross-driver staleness guard, same as readStore's plain branch
+        // a plain-by-design table (tombstones, capped buckets, links, the
+        // audit log), or a keyed table whose first create was cut before
+        // its ledger: read as-is for the audit, behind the cross-driver
+        // staleness guard
         Sinks.freshenIfRewritten(spark, p)
         Some(spark.read.parquet(p))
       }
@@ -618,14 +613,13 @@ object Governance {
     // is the documented crash window — the trail under-reports, warn.
     // The ledger must never trail the log (that is how a seq gets
     // reused) — error; ledger ahead of the log is the same crash window
-    // as a gap — warn. Legacy rows (seq = -1, pre-ledger files) are
-    // outside the numbering contract and excluded.
+    // as a gap — warn.
     // presence AND at least one committed file: a kill during the very
     // first audit append leaves the bare-dir torn-create state, which
     // has no events to audit (and no footer to read)
     if (fileExists(auditPath(warehouse)) &&
         Sinks.hasCommittedDataFiles(spark, auditPath(warehouse))) {
-      val events = readAudit(spark, warehouse).filter(col("seq") >= 0)
+      val events = readAudit(spark, warehouse)
         .select(col("seq"), col("at_ms"), col("op"), col("id_col"),
           col("n_ids")).distinct()
       countRow("audit_duplicate_seq", "audit_log", "error")(
@@ -640,8 +634,8 @@ object Governance {
         .select(lit("audit_seq_gaps").as("check"),
           lit("audit_log").as("table"), col("violations"),
           lit("warn").as("severity"))
-      // an ABSENT ledger is the documented legacy state (pre-ledger log;
-      // appendAudit's scan fallback keeps numbering correct), so the
+      // an ABSENT ledger (removed; appendAudit's scan fallback
+      // re-derives the numbering) has nothing to order against, so the
       // ordering checks only run against a ledger that exists
       if (fileExists(auditSeqLedger(warehouse))) {
         val ledger = readLongLedger(spark, auditSeqLedger(warehouse))

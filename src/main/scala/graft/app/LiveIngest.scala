@@ -1,7 +1,7 @@
 package graft.app
 
 import graft.streaming.LiveBars
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
@@ -37,11 +37,18 @@ object LiveIngest {
     */
   def start(spark: SparkSession, pagesDir: String, warehouse: String,
             trigger: Trigger = Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val bars = spark.readStream.format("polygon")
-      .option("path", pagesDir).load()
-      .withColumn("datetime", timestamp_millis(col("t")))
-    LiveBars.dedupStream(bars, "datetime", "1 hour",
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    sinkBars(spark.readStream.format("polygon")
+      .option("path", pagesDir).load(), warehouse, trigger)
+
+  /** The one live sink chain both transports share: watermarked dedup on
+    * the series key, then the exactly-once parquet append to
+    * `silver/bars_live` under the warehouse's checkpoint.
+    */
+  private def sinkBars(bars: DataFrame, warehouse: String, trigger: Trigger)
+      : org.apache.spark.sql.streaming.StreamingQuery =
+    LiveBars.dedupStream(bars.withColumn("datetime", timestamp_millis(col("t"))),
+        "datetime", "1 hour",
         keys = Seq("ticker", "timespan", "multiplier", "t", "adjusted"))
       .writeStream
       .outputMode("append")
@@ -50,7 +57,6 @@ object LiveIngest {
       .option("checkpointLocation", s"$warehouse/_checkpoints/bars_live")
       .trigger(trigger)
       .start()
-  }
 
   /** Live ingest over the HTTP cursor transport — the reference's actual
     * live protocol (README.md:7; requests.get + next_url cursors,
@@ -72,17 +78,7 @@ object LiveIngest {
       .option("tickers", tickers.mkString(","))
       .option("series", series.mkString(","))
     maxPagesPerTrigger.foreach(c => reader.option("maxPagesPerTrigger", c))
-    val bars = reader.load()
-      .withColumn("datetime", timestamp_millis(col("t")))
-    LiveBars.dedupStream(bars, "datetime", "1 hour",
-        keys = Seq("ticker", "timespan", "multiplier", "t", "adjusted"))
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", s"$warehouse/silver/bars_live")
-      .option("checkpointLocation", s"$warehouse/_checkpoints/bars_live")
-      .trigger(trigger)
-      .start()
+    sinkBars(reader.load(), warehouse, trigger)
   }
 
   /** Streaming dimension refresh — the reference refreshes dims daily while

@@ -260,7 +260,11 @@ object Sinks {
     * SwapProtocol.storePresent. Lease-free callers see the state
     * unchanged and the reader contract applies (CorpusStore.readStore's
     * documented loud verdict): healing without the lease could delete a
-    * LIVE writer's first create out from under its in-flight job.
+    * LIVE writer's first create out from under its in-flight job. This
+    * heal is layout-agnostic (plain tables get it too); the keyed corpus
+    * tables add the stronger rule that a directory WITH committed files
+    * but no spec ledger is an interrupted create as well
+    * (`CorpusStore.keyedStorePresent`).
     */
   def storePresent(spark: SparkSession, path: String): Boolean = {
     val present = SwapProtocol.storePresent(spark, path)
@@ -436,41 +440,6 @@ object Sinks {
       // pass over the table per takedown
       val obs = org.apache.spark.sql.Observation("graft_delete_kept")
       val kept = stored.join(keyRows, keyCols, "left_anti")
-        .observe(obs, count(lit(1)).as("kept"))
-      swapInto(spark, path, kept, partitionCols, targetFiles = None)
-      (before, obs.get("kept").asInstanceOf[Long])
-    }
-  }
-
-  /** Hard delete of rows where ANY of `targetCols` matches a key — the
-    * edge-table form of deleteByKey (a pair/link table references an entity
-    * from several columns; a takedown must drop the row if either side
-    * matches). Chained anti-joins — each one hash-joinable, unlike an OR
-    * join condition, which would force a nested loop — feed ONE rewrite and
-    * one atomic swap, so the table is scanned and rewritten once however
-    * many columns reference the entity. Same existence probe and observed
-    * after-count as deleteByKey. Returns (rowsBefore, rowsAfter).
-    */
-  def deleteByAnyKey(spark: SparkSession, path: String, keys: DataFrame,
-                     keyCol: String, targetCols: Seq[String],
-                     partitionCols: Seq[String] = Nil): (Long, Long) = {
-    require(targetCols.nonEmpty, "deleteByAnyKey needs at least one target column")
-    val stored = readForRewrite(spark, path)
-    val keyRows = keys.select(col(keyCol)).dropDuplicates()
-    val before = stored.count()
-    val hasMatch = targetCols.exists { c =>
-      !stored.join(keyRows.withColumnRenamed(keyCol, c), Seq(c), "left_semi")
-        .limit(1).isEmpty
-    }
-    if (!hasMatch) (before, before)
-    else {
-      val obs = org.apache.spark.sql.Observation("graft_delete_any_kept")
-      // each USING anti-join rotates its key column to the front — restore
-      // the stored column order so the rewrite doesn't permute the schema
-      val kept = targetCols.foldLeft(stored) { (d, c) =>
-          d.join(keyRows.withColumnRenamed(keyCol, c), Seq(c), "left_anti")
-        }
-        .select(stored.columns.toIndexedSeq.map(col): _*)
         .observe(obs, count(lit(1)).as("kept"))
       swapInto(spark, path, kept, partitionCols, targetFiles = None)
       (before, obs.get("kept").asInstanceOf[Long])
@@ -867,8 +836,11 @@ object Sinks {
     new org.apache.hadoop.fs.Path(path + "._bucketspec")
 
   /** (bucketKeys, numBuckets) when `path` is a bucketed store — i.e. its
-    * spec ledger exists. A plain-parquet table returns None, which is how
-    * callers keep legacy (pre-bucketing) warehouses readable.
+    * spec ledger exists. None for an absent table, a table that is plain
+    * by design (silver, tombstones, logs), and a bucketed store whose first
+    * create was cut before the ledger landed — which is how the corpus
+    * tables tell that interrupted create apart
+    * (`CorpusStore.healTornCreate`).
     */
   def bucketSpecOf(spark: SparkSession, path: String): Option[(Seq[String], Int)] =
     readBucketLedger(spark, path).map { case (keys, n, _) => (keys, n) }
@@ -887,7 +859,8 @@ object Sinks {
     AtomicFiles.readLine(fs, p).map { line =>
       require(line.contains("|"),
         s"bucketed store $path has a corrupt ._bucketspec ledger — " +
-          "restore or remove it (removing demotes the store to plain parquet)")
+          "restore it (without a ledger the store reads as an interrupted " +
+          "first create, which the next leased writer clears)")
       // split at most 3 fields: the schema DDL may itself contain pipes
       val parts = line.trim.split("\\|", 3)
       (parts(1).split(',').toSeq, parts(0).toInt,
@@ -1266,10 +1239,15 @@ object Sinks {
     }
   }
 
-  /** deleteByAnyKey for a bucketed store: chained anti-joins over the
-    * target columns feeding ONE bucket-preserving rewrite — the edge-table
-    * takedown (pairs referencing a doc from either side) without losing
-    * the bucket layout the table's append anti-join depends on.
+  /** Hard delete of rows where ANY of `targetCols` matches a key — the
+    * edge-table form of deleteBucketedByKey (a pair table references an
+    * entity from both sides; a takedown must drop the row if either side
+    * matches). Chained anti-joins — each one hash-joinable, unlike an OR
+    * join condition, which would force a nested loop — feed ONE
+    * bucket-preserving rewrite and one atomic swap, so the table is
+    * scanned and rewritten once however many columns reference the
+    * entity. Same existence probe and observed after-count as
+    * deleteBucketedByKey. Returns (rowsBefore, rowsAfter).
     */
   def deleteBucketedByAnyKey(spark: SparkSession, path: String,
                              keys: DataFrame, keyCol: String,
@@ -1286,6 +1264,8 @@ object Sinks {
     if (!hasMatch) (before, before)
     else {
       val obs = org.apache.spark.sql.Observation("graft_bkt_delete_any_kept")
+      // each USING anti-join rotates its key column to the front — restore
+      // the stored column order so the rewrite doesn't permute the schema
       val kept = targetCols.foldLeft(stored) { (d, c) =>
           d.join(keyRows.withColumnRenamed(keyCol, c), Seq(c), "left_anti")
         }

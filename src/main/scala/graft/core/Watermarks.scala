@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The batch half of the incremental protocol (SURVEY.md §3-E3, §4): an
-  * explicit `_watermarks` table — (ticker, adjusted) → max ingested event
-  * time — replacing the reference's sink-scraping watermark discovery
+  * explicit `_watermarks` table — (ticker, timespan, multiplier, adjusted)
+  * → max ingested event time — replacing the reference's sink-scraping watermark discovery
   * (airflow-dags/dag_aggregates_etl.py:128-150 re-downloads the latest S3
   * object and maxes over its rows on every run).
   *
@@ -30,78 +30,53 @@ object Watermarks {
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         org.apache.spark.sql.types.StructType.fromDDL(
-          "ticker STRING, adjusted BOOLEAN, max_t BIGINT, updated_at TIMESTAMP")))
+          "ticker STRING, timespan STRING, multiplier INT, adjusted BOOLEAN, " +
+            "max_t BIGINT, updated_at TIMESTAMP")))
   }
 
-  /** Series-identity columns present in a frame: a multi-granularity
-    * pipeline watermarks each (ticker, timespan, multiplier, adjusted)
-    * series independently (a 1-minute watermark must never filter a 1-hour
-    * series of the same ticker); frames carrying only the legacy
-    * (ticker, adjusted) pair keep the legacy key. A warehouse sticks to one
-    * key shape — it is derived from the first advanced batch.
+  /** The series key: a multi-granularity pipeline watermarks each series
+    * independently (a 1-minute watermark must never filter a 1-hour series
+    * of the same ticker).
     */
-  private def keyCols(df: DataFrame): Seq[String] =
-    Seq("ticker", "timespan", "multiplier", "adjusted")
-      .filter(df.columns.contains)
+  val keyCols: Seq[String] = Seq("ticker", "timespan", "multiplier", "adjusted")
+
+  /** Every batch must carry the full series key: joining or grouping on a
+    * narrower one would match one row against several series' watermarks
+    * (duplicating it) or collapse them to their max (dropping rows of
+    * slower-ingesting granularities as "already seen").
+    */
+  private def requireSeriesKey(batch: DataFrame): Unit = {
+    val missing = keyCols.filterNot(batch.columns.contains)
+    require(missing.isEmpty,
+      s"batch lacks series-key column(s) ${missing.mkString(", ")}; the " +
+        s"watermark key is (${keyCols.mkString(", ")})")
+  }
 
   /** New-rows-only filter for an incoming batch: strict t > watermark per
-    * series; series without a watermark pass whole. The incoming frame must
-    * carry the table's full series key — silently narrowing the join to the
-    * shared columns would match one incoming row against several watermark
-    * rows and DUPLICATE it (advance fails loudly on the same mismatch).
+    * series; series without a watermark pass whole.
     */
   def filterNew(incoming: DataFrame, wm: DataFrame): DataFrame = {
-    // cold start: an EMPTY watermark table (fresh warehouse — read() falls
-    // back to the legacy-schema empty frame) constrains nothing, so every
-    // row passes and no key-shape can mismatch; the shape is pinned by the
-    // first advance()
-    if (wm.isEmpty) return incoming
-    val keys = keyCols(wm)
-    requireSameKeyShape(keyCols(incoming), keys)
-    incoming.join(broadcast(wm.select((keys :+ "max_t").map(col): _*)),
-        keys, "left")
+    requireSeriesKey(incoming)
+    incoming.join(broadcast(wm.select((keyCols :+ "max_t").map(col): _*)),
+        keyCols, "left")
       .filter(col("max_t").isNull || col("t") > col("max_t"))
       .drop("max_t")
   }
-
-  /** Key shapes must match EXACTLY in both directions: a full
-    * (ticker,timespan,multiplier,adjusted) batch against a legacy
-    * (ticker,adjusted) table would silently group on the narrow key and
-    * collapse per-granularity watermarks to the max across series — rows of
-    * slower-ingesting granularities would then be dropped as "already seen".
-    * The opposite mismatch (narrow batch, full table) already failed loudly;
-    * this makes both directions loud.
-    */
-  private def requireSameKeyShape(batchKeys: Seq[String], tableKeys: Seq[String]): Unit =
-    require(batchKeys == tableKeys,
-      s"batch series-key columns (${batchKeys.mkString(", ")}) must exactly match " +
-        s"the watermark table's key (${tableKeys.mkString(", ")}); a narrower batch " +
-        "would duplicate rows, a wider one would collapse per-granularity watermarks")
 
   /** Advance watermarks with the batch's per-series max t (full-outer merge,
     * monotone: never moves backward).
     */
   def advance(spark: SparkSession, warehouse: String, batch: DataFrame): Unit = {
-    val hasTable = Sinks.pathExists(spark, path(warehouse)) ||
-      Sinks.pathExists(spark, path(warehouse) + "_bak")
-    val existing = read(spark, warehouse)
-    // key shape is pinned by the existing table; a fresh warehouse takes it
-    // from the first advanced batch
-    val keys = if (hasTable) keyCols(existing) else keyCols(batch)
-    if (hasTable) requireSameKeyShape(keyCols(batch), keys)
-    val newWm = batch.groupBy(keys.map(col): _*)
+    requireSeriesKey(batch)
+    val newWm = batch.groupBy(keyCols.map(col): _*)
       .agg(max(col("t")).as("batch_max"))
-    val merged =
-      if (!hasTable)
-        newWm.select(keys.map(col) ++ Seq(
-          col("batch_max").as("max_t"),
-          current_timestamp().as("updated_at")): _*)
-      else existing.as("old")
-        .join(newWm.as("new"), keys, "full_outer")
-        .select(keys.map(col) ++ Seq(
-          greatest(coalesce(col("old.max_t"), lit(Long.MinValue)),
-                   coalesce(col("new.batch_max"), lit(Long.MinValue))).as("max_t"),
-          current_timestamp().as("updated_at")): _*)
+    // a fresh warehouse merges against read()'s empty frame
+    val merged = read(spark, warehouse).as("old")
+      .join(newWm.as("new"), keyCols, "full_outer")
+      .select(keyCols.map(col) ++ Seq(
+        greatest(coalesce(col("old.max_t"), lit(Long.MinValue)),
+                 coalesce(col("new.batch_max"), lit(Long.MinValue))).as("max_t"),
+        current_timestamp().as("updated_at")): _*)
     // tiny dim table: rewrite whole via write-tmp + rename swap. Hadoop
     // FileSystem (not java.io.File) so the same code works on hdfs/s3a, and
     // rename (not read-back + overwrite) so a crash window never leaves the

@@ -201,7 +201,8 @@ case class KmeansDistSq(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
+    val n = x.numElements()
+    KmeansDistSq.requireSameLength(n, y.numElements())
     var acc = 0.0
     var i = 0
     while (i < n) {
@@ -219,7 +220,8 @@ case class KmeansDistSq(left: Expression, right: Expression)
       val acc = ctx.freshName("acc")
       val t = ctx.freshName("t")
       s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
+         |int $n = $a.numElements();
+         |graft.functions.KmeansDistSq.requireSameLength($n, $b.numElements());
          |double $acc = 0.0;
          |for (int $i = 0; $i < $n; $i++) {
          |  double $t = (double) $a.getLong($i) / 1000000.0 - $b.getDouble($i);
@@ -231,6 +233,16 @@ case class KmeansDistSq(left: Expression, right: Expression)
 
   override def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+object KmeansDistSq {
+  /** A vector and a centroid of different lengths have no distance: fail
+    * loudly on both eval paths, as `graft_vec_sum` does on ragged input,
+    * instead of folding over the shorter prefix.
+    */
+  def requireSameLength(vi: Int, ce: Int): Unit =
+    if (vi != ce) throw new IllegalArgumentException(
+      s"graft_d2: vector and centroid differ in length ($vi vs $ce)")
 }
 
 /** Element-wise sum of array<bigint> vectors — the kmeans update step's

@@ -299,8 +299,8 @@ object DedupOps {
     // increment's signatures are computed fresh, only pairs touching a new
     // document are derived; old-old pairs are previous increments' outputs.
     // The store is derived in-plan from the old docs here (a declared query
-    // is a pure DataFrame); the Parquet round-trip — appendSignatureStore
-    // across two increments, with a plan assertion that the old corpus'
+    // is a pure DataFrame); the round-trip through
+    // appendSignatureStoreBucketed across two increments, with a plan assertion that the old corpus'
     // text files are never scanned — is locked in DedupSpec. The oracle
     // recomputes the full pair set (same shared CTEs) and keeps the pairs
     // with a new side — the increment path must agree with the full
@@ -834,15 +834,29 @@ object DedupOps {
       .select(col("doc_id"), col("bs.band").as("band"), col("bs.sig").as("sig"))
   }
 
+  /** The band store's geometry identity — what `Sinks.checkAndStampParams`
+    * stamps on the store and refuses drift against: the (doc_id, band)
+    * replay no-op is only sound while sig stays a stable function of the
+    * document, i.e. while the hash geometry is frozen.
+    */
+  def minhashParams(numHashes: Int, bands: Int): Seq[(String, String)] =
+    Seq("numHashes" -> numHashes.toString, "bands" -> bands.toString)
+
   /** Persist a corpus drop's MinHash signature STORE to the warehouse — the
     * once-per-document signing pass a production dedup pipeline pays at
     * ingest so later increments never re-read old text (the reference's
     * incremental-scan-don't-refetch protocol,
-    * old_source/old_source_op.py:129-176, applied to dedup state). Writes
-    * band rows keyed (doc_id, band) and the exact shingle sets keyed
-    * (doc_id), both via Sinks.idempotentAppend, so a replayed drop is a
-    * no-op. The shingle table is persisted in-memory for the duration so
-    * the two writes share one tokenize+shingle pass.
+    * old_source/old_source_op.py:129-176, applied to dedup state). Both
+    * tables are path-anchored BUCKETED stores — bands on the band-join key
+    * (band, sig), shingles on the verify key (doc_id) — which is what
+    * makes `minhashLshIncremental`'s store sides exchange-free: each drop
+    * pays one increment-sized shuffle per join instead of re-shuffling the
+    * corpus-sized store (the per-symbol-table layout of the reference,
+    * v2022/etl-containers/aggregates/src/aggregates_etl.py:169-177,
+    * engine-native). Both writes are keyed bucketed idempotent appends, so
+    * a replayed drop is a no-op, and they share one tokenize+shingle pass.
+    * The bucket count is fixed at store creation (Sinks' spec ledger);
+    * `buckets` only matters on the first drop.
     *
     * WRITE ORDER IS A CRASH CONTRACT: the shingle table is the ingest
     * trim's existence key (CorpusIngest.run anti-joins drops against it),
@@ -852,36 +866,6 @@ object DedupOps {
     * every per-table keyed append no-ops the rows that already landed).
     * Shingles-first would leave the doc permanently half-ingested: the
     * trim skips it forever while its band rows never arrive.
-    */
-  /** The band store's geometry identity — what `Sinks.checkAndStampParams`
-    * stamps on the store and refuses drift against: the (doc_id, band)
-    * replay no-op is only sound while sig stays a stable function of the
-    * document, i.e. while the hash geometry is frozen.
-    */
-  def minhashParams(numHashes: Int, bands: Int): Seq[(String, String)] =
-    Seq("numHashes" -> numHashes.toString, "bands" -> bands.toString)
-
-  def appendSignatureStore(newDocs: DataFrame, bandPath: String,
-                           shinglePath: String, numHashes: Int = 64,
-                           bands: Int = 16): Unit = {
-    graft.core.Sinks.checkAndStampParams(newDocs.sparkSession, bandPath,
-      minhashParams(numHashes, bands))
-    val sh = shingleTable(newDocs)
-    graft.core.Sinks.idempotentAppend(minhashBandTable(sh, numHashes, bands),
-      bandPath, keys = Seq("doc_id", "band"), partitionCols = Nil)
-    graft.core.Sinks.idempotentAppend(sh, shinglePath,
-      keys = Seq("doc_id"), partitionCols = Nil)
-  }
-
-  /** appendSignatureStore with the store laid out as path-anchored BUCKETED
-    * tables — bands on the band-join key (band, sig), shingles on the
-    * verify key (doc_id). This is what makes `minhashLshIncremental`'s
-    * store sides exchange-free: each drop pays one increment-sized shuffle
-    * per join instead of re-shuffling the corpus-sized store (the
-    * per-symbol-table layout of the reference, v2022/etl-containers/
-    * aggregates/src/aggregates_etl.py:169-177, engine-native). The bucket
-    * count is fixed at store creation (Sinks' spec ledger); `buckets` only
-    * matters on the first drop.
     */
   def appendSignatureStoreBucketed(newDocs: DataFrame, bandPath: String,
                                    shinglePath: String, buckets: Int,
@@ -893,8 +877,7 @@ object DedupOps {
     graft.core.Sinks.checkAndStampParams(newDocs.sparkSession, bandPath,
       minhashParams(numHashes, bands))
     val sh = shingleTable(newDocs)
-    // bands first, shingles LAST — the shingle table is the ingest trim's
-    // commit point (see appendSignatureStore's crash contract).
+    // bands first, shingles LAST — the commit point (crash contract above).
     // The band append's idempotence keys carry the BUCKET keys too: sig is
     // a deterministic function of (doc_id, band), so matching on
     // (band, sig, doc_id) is equivalent to (doc_id, band) — and because
@@ -915,7 +898,7 @@ object DedupOps {
     * fresh ONLY for `newDocs`; the corpus side arrives as the PERSISTED
     * signature store — `storedBands` (doc_id, band, sig) and
     * `storedShingles` (doc_id, sh), written at ingest by
-    * appendSignatureStore — so old documents' text is never re-read, let
+    * appendSignatureStoreBucketed — so old documents' text is never re-read, let
     * alone re-shingled. The bucket join is increment-sized × bucket hit
     * rate, never corpus × corpus (new-new pairs come from the fresh side
     * unioned into the store; old-old pairs cannot appear because the left

@@ -885,7 +885,7 @@ object SimilarityOps {
     * (the on-disk spec ledger wins thereafter).
     *
     * WRITE ORDER IS A CRASH CONTRACT (the embedding twin of
-    * `DedupOps.appendSignatureStore`'s): the vector store is the ingest
+    * `DedupOps.appendSignatureStoreBucketed`'s): the vector store is the ingest
     * trim's existence key (`CorpusIngest.ingestEmbeddings` anti-joins
     * drops against it), so it is written LAST — the commit point. A crash
     * between the two writes leaves the vec's row absent from the vector

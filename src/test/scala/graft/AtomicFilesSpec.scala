@@ -304,6 +304,19 @@ class AtomicFilesSpec extends AnyFunSuite {
     assert(Sinks.isBucketedStore(spark, table))
     assert(Sinks.readBucketedPath(spark, table).count() == 3L)
     assert(Sinks.hasCommittedDataFiles(spark, table))
+    // a keyed table whose first create COMMITTED files but died before
+    // its ledger: lease-free readers get the same verdict, never a plain
+    // read of the partial table; the leased retry clears and recreates it
+    val cut = s"$dir/cut"
+    df.filter("doc_id < 2").write.parquet(cut)
+    val e2 = intercept[IllegalStateException](
+      CorpusStore.readStore(spark, cut).collect())
+    assert(e2.getMessage.contains("torn store create"), e2.getMessage)
+    graft.core.WarehouseLease.withWriteLease(spark, dir) {
+      CorpusStore.appendKeyedStore(spark, df, cut, buckets = 2)
+    }
+    assert(Sinks.bucketSpecOf(spark, cut).contains((Seq("doc_id"), 2)))
+    assert(CorpusStore.readStore(spark, cut).count() == 3L)
     // plain-append twin: a torn PLAIN dir writes as if absent
     val plain = s"$dir/plain"
     Files.createDirectories(java.nio.file.Paths.get(s"$plain/_temporary/0"))

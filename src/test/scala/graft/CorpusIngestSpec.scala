@@ -138,8 +138,7 @@ class CorpusIngestSpec extends AnyFunSuite {
   test("signature store compacts once drops fragment it; pairs unchanged") {
     val wh = java.nio.file.Files.createTempDirectory("corpus-whcmp").toString
     // 6 single-doc drops at storeBuckets=1 → file counts pass the 4×buckets
-    // gate of the bucketed compaction (and the staged/legacy gate stays at
-    // compactTargetFiles for the thin tables)
+    // gate of the bucketed compaction
     val texts = Seq(
       base, unrelated, base.replace("winter", "summer"),
       "gardens and rivers flowing through quiet mountain valleys at dawn today",
@@ -148,7 +147,7 @@ class CorpusIngestSpec extends AnyFunSuite {
     texts.zipWithIndex.foreach { case (t, i) =>
       CorpusIngest.run(spark,
         Seq((i.toLong * 10 + 1, t)).toDF("doc_id", "text"), wh,
-        compactTargetFiles = Some(1), storeBuckets = 1)
+        storeBuckets = 1)
     }
     for (t <- Seq("bands", "shingles")) {
       val files = graft.core.Sinks.dataFileCount(spark, s"$wh/corpus/$t")
@@ -162,7 +161,7 @@ class CorpusIngestSpec extends AnyFunSuite {
     // the compacted store serves the next increment identically
     val (n, _) = CorpusIngest.run(spark,
       Seq((100L, base + " with a small tail")).toDF("doc_id", "text"), wh,
-      compactTargetFiles = Some(1), storeBuckets = 1)
+      storeBuckets = 1)
     assert(n == 1L)
     val pairsAfter = spark.read.parquet(s"$wh/corpus/pairs")
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
@@ -300,25 +299,36 @@ class CorpusIngestSpec extends AnyFunSuite {
     graft.core.GraftCaches.releaseAll(spark)
   }
 
-  test("legacy plain-parquet store keeps working and is not silently rebucketed") {
+  test("interrupted first create: a ledger-less table is recreated bucketed on retry") {
     import graft.core.Sinks
-    val wh = java.nio.file.Files.createTempDirectory("corpus-whleg").toString
-    // hand-build a pre-bucketing warehouse: plain store, no spec ledger
-    val old = Seq((10L, base), (20L, unrelated)).toDF("doc_id", "text")
-    graft.operators.DedupOps.appendSignatureStore(
-      old, s"$wh/corpus/bands", s"$wh/corpus/shingles")
-    Sinks.idempotentAppend(old, s"$wh/corpus/documents",
-      keys = Seq("doc_id"), partitionCols = Nil)
+    val drop = Seq((10L, base), (20L, unrelated),
+      (30L, base.replace("winter", "summer"))).toDF("doc_id", "text")
+    val clean = CorpusIngest.run(spark, drop,
+      java.nio.file.Files.createTempDirectory("corpus-whclean").toString)
+    assert(clean == ((3L, 1L)), s"clean run landed $clean")
+    def docsOf(wh: String) = spark.read.parquet(s"$wh/corpus/documents")
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    // shingles window: the drop's last create committed its files, then the
+    // writer died before stamping the ledger
+    val whSh = java.nio.file.Files.createTempDirectory("corpus-whtornsh").toString
+    CorpusIngest.run(spark, drop, whSh)
+    java.nio.file.Files.delete(
+      java.nio.file.Paths.get(s"$whSh/corpus/shingles._bucketspec"))
+    spark.sql(s"DROP TABLE IF EXISTS `${Sinks.bucketedTableName(s"$whSh/corpus/shingles")}`")
+    assert(Sinks.hasCommittedDataFiles(spark, s"$whSh/corpus/shingles"))
+    // documents window: the drop's files landed plain, nothing else did
+    val whDocs = java.nio.file.Files.createTempDirectory("corpus-whtorndocs").toString
+    drop.write.parquet(s"$whDocs/corpus/documents")
+    for (wh <- Seq(whSh, whDocs)) {
+      assert(CorpusIngest.run(spark, drop, wh) == clean,
+        s"$wh: the retry must land what a clean run lands")
+      for (t <- Seq("documents", "shingles"))
+        assert(Sinks.isBucketedStore(spark, s"$wh/corpus/$t"),
+          s"$wh: corpus/$t must come back bucketed, not appended as plain parquet")
+      assert(docsOf(wh) == Seq(10L, 20L, 30L), s"$wh: ${docsOf(wh)}")
+      assert(spark.read.parquet(s"$wh/corpus/shingles").count() == 3L)
+    }
     graft.core.GraftCaches.releaseAll(spark)
-    assert(!Sinks.isBucketedStore(spark, s"$wh/corpus/bands"))
-
-    val (n, p) = CorpusIngest.run(spark,
-      Seq((30L, base.replace("winter", "summer"))).toDF("doc_id", "text"), wh)
-    assert((n, p) == (1L, 1L), s"legacy warehouse ingest landed ($n, $p)")
-    assert(!Sinks.isBucketedStore(spark, s"$wh/corpus/bands"),
-      "a legacy store must stay plain — mixed layouts corrupt the scan")
-    assert(spark.read.parquet(s"$wh/corpus/pairs")
-      .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet == Set((10L, 30L)))
   }
 
   test("reinstate lifts tombstones: takedown → reinstate → re-promotion lands the doc again") {

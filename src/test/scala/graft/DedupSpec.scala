@@ -128,8 +128,8 @@ class DedupSpec extends AnyFunSuite {
     // visible as a FileScan of corpus_docs in the increment plan
     Seq((0L, base), (2L, unrelated)).toDF("doc_id", "text")
       .write.parquet(oldDocsPath)
-    DedupOps.appendSignatureStore(
-      spark.read.parquet(oldDocsPath), bandPath, shPath)
+    DedupOps.appendSignatureStoreBucketed(
+      spark.read.parquet(oldDocsPath), bandPath, shPath, buckets = 2)
     graft.core.GraftCaches.releaseAll(spark)
 
     // increment 1: the near-dup of stored doc 0 arrives
@@ -138,15 +138,15 @@ class DedupSpec extends AnyFunSuite {
       spark.read.parquet(bandPath), spark.read.parquet(shPath), inc1, 0.5)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(got1 == Set((0L, 1L)), s"increment 1 pairs: $got1")
-    DedupOps.appendSignatureStore(inc1, bandPath, shPath)
+    DedupOps.appendSignatureStoreBucketed(inc1, bandPath, shPath, buckets = 2)
     graft.core.GraftCaches.releaseAll(spark)
 
-    // replaying the same drop is a no-op (idempotentAppend on (doc_id, band))
+    // replaying the same drop is a no-op (keyed on (band, sig, doc_id))
     val bandRows = spark.read.parquet(bandPath).count()
-    DedupOps.appendSignatureStore(inc1, bandPath, shPath)
+    DedupOps.appendSignatureStoreBucketed(inc1, bandPath, shPath, buckets = 2)
     graft.core.GraftCaches.releaseAll(spark)
     assert(spark.read.parquet(bandPath).count() == bandRows,
-      "replayed appendSignatureStore duplicated store rows")
+      "replayed appendSignatureStoreBucketed duplicated store rows")
 
     // increment 2: an exact copy of doc 0 — pairs with BOTH stored docs,
     // including doc 1 which arrived in a previous increment

@@ -103,15 +103,30 @@ class FunctionsSpec extends AnyFunSuite {
         |  0D, (acc, x) -> acc + x) AS d""".stripMargin).as[Double].collect()
     val viaExpr = df.selectExpr("graft_d2(vi, ce) AS d").as[Double].collect()
     assert(viaExpr.toSeq == hof.toSeq, "codegen d2 must match the HOF bit-for-bit")
+    // length mismatch: no distance, on either eval path — a loud failure,
+    // not a fold over the shorter prefix (an RDD-backed frame, so the
+    // optimizer cannot fold the projection into a local relation)
+    val ragged = spark.sparkContext
+      .parallelize(Seq((Array(2000000L), Array(1.0, 9.0))), 1).toDF("vi", "ce")
+    def raggedFails(): Unit = {
+      val e = intercept[Exception](
+        ragged.selectExpr("graft_d2(vi, ce) AS d").collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(c => c.getMessage != null &&
+          c.getMessage.contains("graft_d2: vector and centroid differ in length")),
+        e.toString)
+    }
+    raggedFails()
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     try {
       val interp = df.selectExpr("graft_d2(vi, ce) AS d").as[Double].collect()
       assert(interp.toSeq == hof.toSeq, "interpreted d2 must match too")
-    } finally spark.conf.set("spark.sql.codegen.wholeStage", "true")
-    // length mismatch: shorter side bounds the loop, no crash
-    val short = Seq((Array(2000000L), Array(1.0, 9.0))).toDF("vi", "ce")
-      .selectExpr("graft_d2(vi, ce) AS d").as[Double].head()
-    assert(short == 1.0)
+      spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+      raggedFails()
+    } finally {
+      spark.conf.set("spark.sql.codegen.wholeStage", "true")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
     // type mismatch fails analysis with the pointed message
     val e = intercept[Exception] {
       Seq((Array(1.0), Array(1.0))).toDF("vi", "ce")

@@ -1027,11 +1027,13 @@ class SinksSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.functions._
     val dir = Files.createTempDirectory("delany").toString + "/pairs"
-    Seq((1L, 2L), (2L, 3L), (4L, 5L), (6L, 7L))
-      .toDF("doc_a", "doc_b").write.parquet(dir)
+    graft.core.Sinks.bucketedIdempotentAppend(
+      Seq((1L, 2L), (2L, 3L), (4L, 5L), (6L, 7L)).toDF("doc_a", "doc_b"),
+      dir, keys = Seq("doc_a", "doc_b"), bucketKeys = Seq("doc_a", "doc_b"),
+      buckets = 2)
 
     // key 2 appears as doc_a in one row and doc_b in another — both must go
-    val (b, a) = graft.core.Sinks.deleteByAnyKey(
+    val (b, a) = graft.core.Sinks.deleteBucketedByAnyKey(
       spark, dir, Seq(2L).toDF("doc_id"), "doc_id", Seq("doc_a", "doc_b"))
     assert((b, a) == ((4L, 2L)), s"got ($b, $a)")
     assert(spark.read.parquet(dir).as[(Long, Long)].collect().toSet
@@ -1039,7 +1041,7 @@ class SinksSpec extends AnyFunSuite {
 
     // no-match takedown: existence probe short-circuits, no rewrite churn
     val filesBefore = graft.core.Sinks.dataFileCount(spark, dir)
-    val (b2, a2) = graft.core.Sinks.deleteByAnyKey(
+    val (b2, a2) = graft.core.Sinks.deleteBucketedByAnyKey(
       spark, dir, Seq(42L).toDF("doc_id"), "doc_id", Seq("doc_a", "doc_b"))
     assert((b2, a2) == ((2L, 2L)))
     assert(graft.core.Sinks.dataFileCount(spark, dir) == filesBefore,

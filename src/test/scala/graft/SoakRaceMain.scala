@@ -200,7 +200,10 @@ object SoakRaceMain {
           // may have interleaved with the other writer) is retried the
           // same way, within the same deadline: re-running the drop is
           // the documented recovery, and every drop is a keyed no-op
-          // replay.
+          // replay. A drop the other pair writer finished meanwhile ends
+          // the wait: a live holder running drop after drop can win every
+          // re-acquire, so a loser that re-read the done set only under
+          // the lease would starve into its deadline.
           val deadline = System.currentTimeMillis() + ttlMs.toLong * 10 + 30000L
           var acquired = false
           var ran = false
@@ -209,7 +212,7 @@ object SoakRaceMain {
             if (System.currentTimeMillis() > deadline) throw e
             Thread.sleep(500L)
           }
-          while (!acquired) {
+          while (!acquired && !doneDrops(eventsFile).contains(k)) {
             ran = false
             try {
               graft.core.WarehouseLease.withWriteLease(spark, warehouse,

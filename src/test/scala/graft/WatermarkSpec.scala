@@ -10,11 +10,15 @@ class WatermarkSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** One-minute adjusted series: the full series key around (ticker, t). */
+  private def minuteSeries(df: org.apache.spark.sql.DataFrame) =
+    df.withColumn("timespan", lit("minute")).withColumn("multiplier", lit(1))
+
   test("batch incremental protocol: filterNew + advance, idempotent, monotone") {
     val wh = Files.createTempDirectory("wm").toString
-    val b1 = Seq(("AAPL", true, 100L, 1.0), ("AAPL", true, 200L, 2.0),
+    val b1 = minuteSeries(Seq(("AAPL", true, 100L, 1.0), ("AAPL", true, 200L, 2.0),
                  ("MSFT", true, 150L, 3.0))
-      .toDF("ticker", "adjusted", "t", "c")
+      .toDF("ticker", "adjusted", "t", "c"))
     // first batch: no watermarks yet → everything passes
     val wm0 = Watermarks.read(spark, wh)
     assert(Watermarks.filterNew(b1, wm0).count() == 3)
@@ -26,9 +30,9 @@ class WatermarkSpec extends AnyFunSuite {
     assert(Watermarks.filterNew(b1, wm1).count() == 0, "replay must be invisible")
 
     // overlapping next batch: only strictly-new rows pass
-    val b2 = Seq(("AAPL", true, 200L, 2.0), ("AAPL", true, 300L, 4.0),
+    val b2 = minuteSeries(Seq(("AAPL", true, 200L, 2.0), ("AAPL", true, 300L, 4.0),
                  ("GOOG", true, 50L, 5.0))
-      .toDF("ticker", "adjusted", "t", "c")
+      .toDF("ticker", "adjusted", "t", "c"))
     val fresh = Watermarks.filterNew(b2, wm1)
     assert(fresh.select("t").as[Long].collect().sorted.toSeq == Seq(50L, 300L))
     Watermarks.advance(spark, wh, fresh)
@@ -72,30 +76,23 @@ class WatermarkSpec extends AnyFunSuite {
       s"mismatch must name the missing key columns: ${e.getMessage}")
   }
 
-  test("wide batch against a legacy-keyed table fails loudly in both advance and filterNew") {
-    // ADVICE r2: the opposite of the missing-key case — a full
-    // (ticker,timespan,multiplier,adjusted) batch advanced against a legacy
-    // (ticker,adjusted) table used to silently groupBy the narrow key,
-    // collapsing per-granularity watermarks to the cross-series max, after
-    // which filterNew silently DROPPED rows of slower-ingesting granularities.
-    val wh = Files.createTempDirectory("wm-wide").toString
-    val legacy = Seq(("AAPL", true, 500L)).toDF("ticker", "adjusted", "t")
-    Watermarks.advance(spark, wh, legacy)
-    val wm = Watermarks.read(spark, wh)
-    val wide = Seq(("AAPL", "minute", 1, true, 600L), ("AAPL", "hour", 1, true, 100L))
-      .toDF("ticker", "timespan", "multiplier", "adjusted", "t")
-    val eAdv = intercept[IllegalArgumentException] { Watermarks.advance(spark, wh, wide) }
-    assert(eAdv.getMessage.contains("timespan"),
-      s"advance mismatch must name the extra key columns: ${eAdv.getMessage}")
-    val eFil = intercept[IllegalArgumentException] { Watermarks.filterNew(wide, wm) }
-    assert(eFil.getMessage.contains("timespan"),
-      s"filterNew mismatch must name the extra key columns: ${eFil.getMessage}")
+  test("advance refuses a batch missing a series-key column") {
+    // the watermark key is fixed at (ticker, timespan, multiplier, adjusted):
+    // grouping a (ticker, adjusted) batch would collapse per-granularity
+    // watermarks to the cross-series max, after which filterNew would drop
+    // rows of slower-ingesting granularities as already seen
+    val wh = Files.createTempDirectory("wm-narrow").toString
+    val narrow = Seq(("AAPL", true, 500L)).toDF("ticker", "adjusted", "t")
+    val e = intercept[IllegalArgumentException] { Watermarks.advance(spark, wh, narrow) }
+    assert(e.getMessage.contains("timespan") && e.getMessage.contains("multiplier"),
+      s"advance must name the missing key columns: ${e.getMessage}")
+    assert(!new java.io.File(Watermarks.path(wh)).exists(),
+      "a refused advance must write nothing")
   }
 
   test("cold start: full-key batch passes filterNew against a fresh warehouse") {
-    // the empty fallback table carries the legacy schema; it must constrain
-    // nothing (no shape check) or a multi-granularity pipeline could never
-    // bootstrap — the key shape is pinned by the first advance()
+    // the empty fallback table carries the full series key and constrains
+    // nothing, so a multi-granularity pipeline bootstraps on it
     val wh = Files.createTempDirectory("wm-cold").toString
     val wm0 = Watermarks.read(spark, wh)
     val wide = Seq(("AAPL", "minute", 1, true, 600L))
@@ -109,7 +106,7 @@ class WatermarkSpec extends AnyFunSuite {
 
   test("advance leaves exactly one _watermarks dir: no _tmp/_bak survivors") {
     val wh = Files.createTempDirectory("wm-clean").toString
-    val b = Seq(("AAPL", true, 100L)).toDF("ticker", "adjusted", "t")
+    val b = minuteSeries(Seq(("AAPL", true, 100L)).toDF("ticker", "adjusted", "t"))
     Watermarks.advance(spark, wh, b)
     Watermarks.advance(spark, wh, b.withColumn("t", col("t") + 1))
     val survivors = new java.io.File(wh).listFiles().map(_.getName).toSet
@@ -121,7 +118,7 @@ class WatermarkSpec extends AnyFunSuite {
 
   test("read falls back to _bak when a swap crashed mid-rename") {
     val wh = Files.createTempDirectory("wm-bak").toString
-    val b = Seq(("AAPL", true, 100L)).toDF("ticker", "adjusted", "t")
+    val b = minuteSeries(Seq(("AAPL", true, 100L)).toDF("ticker", "adjusted", "t"))
     Watermarks.advance(spark, wh, b)
     // simulate a crash between rename(main, bak) and rename(tmp, main)
     val main = new java.io.File(Watermarks.path(wh))
