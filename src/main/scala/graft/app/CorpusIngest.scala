@@ -2,7 +2,7 @@ package graft.app
 
 import graft.core.Sinks
 import graft.app.CorpusStore._
-import graft.operators.DedupOps
+import graft.operators.{DedupOps, Multimodal, SimilarityOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -106,148 +106,8 @@ object CorpusIngest {
           storeBuckets: Int = 8,
           maxBucketCandidates: Option[Int] = None,
           hotBucketSalt: Int = 0): (Long, Long) =
-      // every mutating entry point holds the warehouse write lease: a
-      // second concurrent drop would pass the trim against a store missing
-      // this drop's increment and silently lose cross-drop pairs — the
-      // lease turns that silent gap into a fail-fast (WarehouseLease doc)
-      graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
-    // park-aware presence (keyedStorePresent, not raw pathExists): a crash-
-    // parked shingle store read as ABSENT would silently take the
-    // first-drop branch — no trim, batch pair derivation — and every
-    // new-old pair against the existing corpus would be lost forever.
-    // Under the lease just taken, the park heals in-line, and so does an
-    // interrupted first create.
-    val storeExists = keyedStorePresent(spark, shinglePath(warehouse))
-    // refuse to mix dedup thresholds in one pair table BEFORE any work: a
-    // pair row carries no threshold, so appends under a different cut-off
-    // would silently corrupt the cumulative table's semantics (the same
-    // refuse-at-the-write philosophy as idempotentAppend's schema guard)
-    checkThreshold(spark, warehouse, threshold)
-    // scope the dedup operators' internal persists (shingle/band frames) to
-    // this drop: every consuming action happens inside run, so a
-    // long-running ingest service doesn't accumulate one MEMORY_AND_DISK
-    // frame set per drop (the release discipline GraftCaches.withScope
-    // exists for — callers' own caches are untouched)
-    graft.core.GraftCaches.withScope(spark) {
-      // exact duplicate rows WITHIN one drop (an at-least-once crawl
-      // re-emits a doc) would each pass the store trim and land twice —
-      // collapse them; conflicting texts under one doc_id remain a caller
-      // bug (the doc model is id-immutable). The dedup runs AFTER the trim:
-      // dropDuplicates shuffles its input, and pre-trim that input is the
-      // caller's frame at full size (promoteAndIngest passes the CUMULATIVE
-      // staged table) — post-trim it is increment-sized, and the trim
-      // anti-join itself stays a co-located zero/one-exchange join when
-      // drop and store share the doc_id bucket layout.
-      val newDocs =
-        (if (!storeExists) drop
-         else drop.join(
-           readStore(spark, shinglePath(warehouse)).select("doc_id"),
-           Seq("doc_id"), "left_anti"))
-          .dropDuplicates()
-      // the increment feeds signature computation AND the landing write,
-      // and its defining anti-join READS the same store the signature
-      // append WRITES — Spark's CacheManager recaches path-reading plans on
-      // write (a persist would silently recompute the increment as EMPTY
-      // after the store append), so cut lineage entirely with an eager
-      // checkpoint (reliable when spark.graft.checkpointDir is configured
-      // — an executor loss mid-drop then re-reads the increment instead of
-      // failing the ingest): the increment is drop-bounded
-      val inc = graft.core.Checkpoints.cut(newDocs)
-      val nNew = inc.count()
-      if (nNew == 0) (0L, 0L)
-      else landIncrement(spark, inc, nNew, warehouse, threshold,
-        storeBuckets, storeExists, maxBucketCandidates, hotBucketSalt)
-    }
-  }
-
-  /** The post-trim half of `run`: derive the increment's pairs, append
-    * every cumulative table, compact the signature store when fragmented.
-    */
-  private def landIncrement(spark: SparkSession, inc: DataFrame, nNew: Long,
-                            warehouse: String, threshold: Double,
-                            storeBuckets: Int,
-                            storeExists: Boolean,
-                            maxBucketCandidates: Option[Int],
-                            hotBucketSalt: Int = 0): (Long, Long) = {
-    // geometry fail-closed BEFORE any candidate derives: the incremental
-    // probe signs the increment with the library geometry, and a store
-    // built under different numHashes/bands would yield garbage candidates
-    // (and, worse, corrupting appends) — the band store's params ledger
-    // refuses the whole drop up front. Stamp-first on the first drop, same
-    // crash ordering as the threshold ledger.
-    Sinks.checkAndStampParams(spark, bandPath(warehouse),
-      graft.operators.DedupOps.minhashParams(64, 16))
-    // HOT-BUCKET cap: the exchange-free store join opts out of AQE skew
-    // splitting, so a boilerplate flood concentrated in one (band, sig)
-    // bucket would concentrate every later drop on one task. When capped,
-    // overflowing buckets are excluded from the probe and RECORDED in
-    // corpus/capped_buckets — the recall contract (pairs witnessed only by
-    // a hot bucket are not derived) is auditable, never silent. The
-    // overflow scan is a co-located two-int-column aggregate per drop.
-    val hot = maxBucketCandidates.flatMap { cap =>
-      if (!storeExists) None
-      else Some(graft.core.GraftCaches.acquire(DedupOps.overflowingBuckets(
-        readStore(spark, bandPath(warehouse)), cap)))
-    }
-    // the capped ledger records a RECALL trade — salt mode has none (hot
-    // buckets still derive their pairs, just through the salted branch)
-    if (hotBucketSalt <= 0)
-      hot.filter(h => !h.isEmpty).foreach(h =>
-        Sinks.idempotentAppend(h, cappedPath(warehouse),
-          keys = Seq("band", "sig"), partitionCols = Nil))
-    // persisted: the pair frame feeds the count, the keyed append, and
-    // the label-store merge (scope-released with the drop)
-    val pairs = graft.core.GraftCaches.acquire(
-      if (!storeExists) DedupOps.minhashLsh(inc, threshold)
-      else DedupOps.minhashLshIncremental(
-        readStore(spark, bandPath(warehouse)),
-        readStore(spark, shinglePath(warehouse)),
-        inc, threshold, excludeBuckets = hot,
-        saltHotBuckets = hotBucketSalt))
-    val nPairs = pairs.count()
-    // stamp BEFORE the pairs land: a crash between an unstamped append and
-    // the stamp would let a later run at a different threshold slip past
-    // checkThreshold and mix semantics — the stamp-first order fails closed
-    // (worst case: a stamped threshold guarding a not-yet-written table)
-    stampThreshold(spark, warehouse, threshold)
-    // the cumulative pair table is keyed-append too (bounded by the
-    // duplicated subset, not the corpus, but that is still warehouse-sized
-    // at crawl scale) — same bucket treatment, keyed (doc_a, doc_b)
-    appendKeyedStore(spark, pairs, pairsPath(warehouse), storeBuckets,
-      keys = Seq("doc_a", "doc_b"))
-    // fold the drop's pairs into the survivors label store — work bounded
-    // by touched components, so the survivors view never re-runs the
-    // full-graph contraction (see the label-store section below)
-    if (nPairs > 0)
-      updateLabels(spark, ccLabelsPath(warehouse), pairsPath(warehouse),
-        pairs, "doc_a", "doc_b", storeBuckets)
-    // documents and doc_stats are cumulative doc_id-keyed tables too, and
-    // their idempotent appends anti-join the FULL table per drop — the
-    // same per-increment store shuffle the band join had. Bucketed on
-    // doc_id, the table side of each append's anti-join plans no exchange.
-    appendKeyedStore(spark, inc, docsPath(warehouse), storeBuckets)
-    appendKeyedStore(spark, docStats(inc), statsPath(warehouse), storeBuckets)
-    // the signature store goes LAST, and within it the shingle table last
-    // of all: the shingle table is the ingest trim's existence key, so its
-    // append is the drop's COMMIT POINT. A crash anywhere earlier leaves
-    // the doc's shingle row absent — the retry re-admits the doc through
-    // the trim and every keyed append above no-ops the rows that already
-    // landed. Writing the trim key any earlier would strand a
-    // half-ingested doc forever (trim skips it; its remaining rows never
-    // arrive). The band table is created first, so its create can be the
-    // one a crash cut: heal it before the append.
-    healTornCreate(spark, bandPath(warehouse))
-    DedupOps.appendSignatureStoreBucketed(inc, bandPath(warehouse),
-      shinglePath(warehouse), buckets = storeBuckets)
-    // maintenance: every drop appends one file set to the signature store,
-    // and the NEXT increment re-reads the whole store — the same
-    // fragmentation rhythm Backfill.run gates on for silver. Atomic swap
-    // through the bucketed writer (its target is the bucket count),
-    // scan-identical data, so pairs already derived are unaffected.
-    Seq(bandPath(warehouse), shinglePath(warehouse)).foreach(p =>
-      Sinks.compactBucketedIfFragmented(spark, p))
-    (nNew, nPairs)
-  }
+    ingestVia(spark, drop, warehouse, textDrops(threshold), storeBuckets,
+      maxBucketCandidates, hotBucketSalt)
 
   /** GOVERNANCE DELETE cascade — the corpus-warehouse form of
     * Sinks.deleteByKey's "gone from the FILES" contract. Deleting only from
@@ -280,45 +140,7 @@ object CorpusIngest {
     */
   def delete(spark: SparkSession, warehouse: String,
              docIds: Seq[Long]): Map[String, (Long, Long)] =
-      graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
-    import spark.implicits._
-    val keys = docIds.toDF("doc_id")
-    val byDocId = Seq(
-      "documents" -> docsPath(warehouse),
-      "shingles" -> shinglePath(warehouse),
-      "bands" -> bandPath(warehouse),
-      "doc_stats" -> statsPath(warehouse),
-      "staged_drops" -> stagedPath(warehouse))
-    val purged = byDocId.flatMap { case (name, p) =>
-      // park-aware (keyedStorePresent): a parked table read as absent would
-      // silently SKIP its purge — a takedown that leaves fingerprints
-      if (!keyedStorePresent(spark, p)) None
-      else Some(name -> Sinks.deleteBucketedByKey(spark, p, keys, Seq("doc_id")))
-    }.toMap
-    // removed pair rows can SPLIT components — incremental merge cannot
-    // express a split, so the label store is dropped here (every crash
-    // window below then falls back to the recompute, never a stale
-    // labeling) and rebuilt EAGERLY from the purged pair table at the end
-    dropStore(spark, ccLabelsPath(warehouse))
-    // tombstone UNCONDITIONALLY: gating this on the staged table existing
-    // left a hole — a takedown issued while a streaming landing was active
-    // but before its first promotion recorded nothing, and that first
-    // promotion then re-staged and re-ingested the deleted doc. The batch
-    // path never consults tombstones, so pure-batch re-submission
-    // semantics are unchanged; the only cost of a spurious tombstone is a
-    // row in a thin table.
-    val tomb = Governance.tombstoneWithCounts(spark, tombPath(warehouse), keys,
-      Seq("doc_id"))
-    val all =
-      if (!keyedStorePresent(spark, pairsPath(warehouse))) purged
-      else purged + ("pairs" -> Sinks.deleteBucketedByAnyKey(spark,
-        pairsPath(warehouse), keys, "doc_id", Seq("doc_a", "doc_b")))
-    rebuildLabels(spark, ccLabelsPath(warehouse), pairsPath(warehouse),
-      "doc_a", "doc_b")
-    Governance.appendAudit(spark, warehouse, "delete", "doc_id", docIds.size.toLong,
-      all + ("tombstones" -> tomb))
-    all
-  }
+    deleteVia(spark, warehouse, TextModality, docIds)
 
   /** TOMBSTONE LIFT — the reversal half of the governance contract: a
     * takedown that turns out to be wrong (counter-notice, mistaken id) is
@@ -340,17 +162,7 @@ object CorpusIngest {
     */
   def reinstate(spark: SparkSession, warehouse: String,
                 docIds: Seq[Long]): Long =
-      graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
-    if (!Sinks.storePresent(spark, tombPath(warehouse))) 0L
-    else {
-      import spark.implicits._
-      val (before, after) = Sinks.deleteByKey(spark, tombPath(warehouse),
-        docIds.toDF("doc_id"), Seq("doc_id"))
-      Governance.appendAudit(spark, warehouse, "reinstate", "doc_id",
-        docIds.size.toLong, Map("tombstones" -> (before, after)))
-      before - after
-    }
-  }
+    reinstateVia(spark, warehouse, TextModality, docIds)
 
   /** Land one EMBEDDING drop — the semantic-modality twin of `run`: trim
     * the drop against the vector store (replayed drops are no-ops), derive
@@ -390,148 +202,9 @@ object CorpusIngest {
                        semThreshold: Double = 0.9,
                        maxBucketCandidates: Option[Int] = None,
                        hotBucketSalt: Int = 0): (Long, Long) =
-      graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
-    // park-aware like run(): a parked vec store must not flip this drop
-    // into the first-drop branch (all new-old pairs lost); an interrupted
-    // first create heals like run()'s
-    val storeExists = keyedStorePresent(spark, embVecsPath(warehouse))
-    checkThresholdAt(spark, embPairsPath(warehouse), "corpus/emb_pairs",
-      threshold)
-    // SemDeDup COVERAGE is refused-before-work like every other contract
-    // here: a partial assignment store silently misses semantic pairs
-    // forever, so the two ways to create one are both errors. (1) Enabling
-    // sem maintenance on a warehouse that already holds vectors the store
-    // never assigned — run retrainSemStore first to cover them. (2) A
-    // sem-maintained warehouse receiving a drop WITHOUT centroids — that
-    // drop's vectors would never enter sem_asg.
-    val semAsgExists = keyedStorePresent(spark, semAsgPath(warehouse))
-    if (trainedCentroids.isDefined) {
-      require(semAsgExists || !storeExists,
-        s"ingestEmbeddings: ${semAsgPath(warehouse)} is missing but the " +
-          "vector store already has vectors the assignment store would " +
-          "never cover — run retrainSemStore(warehouse) to build sem_asg " +
-          "over the existing corpus before sem-maintained drops")
-      checkThresholdAt(spark, semPairsPath(warehouse), "corpus/sem_pairs",
-        semThreshold)
-      // frozen-centroid identity fail-closed BEFORE any work: a drop
-      // assigned under different centroids than sem_asg was built with
-      // fragments clusters silently — pin the centroid fingerprint the
-      // way the band stores pin their hash geometry
-      Sinks.checkAndStampParams(spark, semAsgPath(warehouse),
-        Seq("cents_fp" -> graft.operators.SimilarityOps
-          .centroidFingerprint(trainedCentroids.get).toString))
-    } else require(!semAsgExists,
-      s"ingestEmbeddings: ${semAsgPath(warehouse)} exists — this warehouse " +
-        "is sem-maintained, and a drop ingested without trainedCentroids " +
-        "would leave its vectors out of the assignment store forever " +
-        "(pass the centroids, or drop the sem store to stop maintaining it)")
-    // drop-scoped operator persists, same release discipline as run()
-    graft.core.GraftCaches.withScope(spark) {
-      val newVecs =
-        (if (!storeExists) drop
-         else drop.join(
-           readStore(spark, embVecsPath(warehouse)).select("vec_id"),
-           Seq("vec_id"), "left_anti"))
-          .dropDuplicates("vec_id")
-      // same lineage cut as run(): the increment feeds pair derivation AND
-      // the store append, and its defining anti-join reads the store the
-      // append writes — the eager cut keeps the increment drop-bounded
-      // (reliable under spark.graft.checkpointDir, executor-local otherwise)
-      val inc = graft.core.Checkpoints.cut(newVecs)
-      val nNew = inc.count()
-      if (nNew == 0) (0L, 0L)
-      else {
-        // geometry fail-closed before any candidate derives (the text
-        // path's argument, over the sign-LSH plane matrix)
-        Sinks.checkAndStampParams(spark, embBandsPath(warehouse),
-          graft.operators.SimilarityOps.embLshParams(6, 48, 64))
-        // hot-bucket cap + ledger, the text path's device on (band, code)
-        val hot = maxBucketCandidates.flatMap { cap =>
-          if (!storeExists) None
-          else Some(graft.core.GraftCaches.acquire(
-            graft.operators.SimilarityOps.overflowingCodeBuckets(
-              readStore(spark, embBandsPath(warehouse)), cap)))
-        }
-        // salt mode derives the hot buckets' pairs (no recall trade) — the
-        // capped ledger records only genuine skips
-        if (hotBucketSalt <= 0)
-          hot.filter(h => !h.isEmpty).foreach(h =>
-            Sinks.idempotentAppend(h, embCappedPath(warehouse),
-              keys = Seq("band", "code"), partitionCols = Nil))
-        val pairs = graft.core.GraftCaches.acquire(
-          if (!storeExists)
-            graft.operators.SimilarityOps.cosinePairsLsh(inc, threshold)
-          else graft.operators.SimilarityOps.cosinePairsLshIncremental(
-            readStore(spark, embBandsPath(warehouse)),
-            readStore(spark, embVecsPath(warehouse)),
-            inc, threshold, excludeBuckets = hot,
-            saltHotBuckets = hotBucketSalt))
-        val nPairs = pairs.count()
-        // stamp-first, same crash ordering argument as run()
-        stampThresholdAt(spark, embPairsPath(warehouse), threshold)
-        appendKeyedStore(spark, pairs, embPairsPath(warehouse), storeBuckets,
-          keys = Seq("vec_a", "vec_b"))
-        if (nPairs > 0)
-          updateLabels(spark, embCcPath(warehouse), embPairsPath(warehouse),
-            pairs, "vec_a", "vec_b", storeBuckets)
-        // SemDeDup maintenance rides the same drop when the caller supplies
-        // FROZEN trained centroids (the retrain-cadence contract — see
-        // SimilarityOps.semAssignTable): assign the increment once, derive
-        // within-cluster pairs against the persisted assignment store,
-        // append pairs + assignments. All of it lands BEFORE the vec-store
-        // commit point below, so a crash anywhere here re-admits the vecs
-        // on retry and these keyed appends no-op what already landed.
-        trainedCentroids.foreach { cents =>
-          val storedAsg =
-            if (semAsgExists)
-              readStore(spark, semAsgPath(warehouse))
-            // first drop: an empty store with the right schema — the
-            // incremental path then derives new-new pairs only
-            else graft.operators.SimilarityOps.semAssignTable(
-              inc.limit(0), cents)
-          // ONE broadcast-assign pass per drop: the persisted frame feeds
-          // the pair derivation (both join branches) AND the store append
-          val freshAsg = graft.core.GraftCaches.acquire(
-            graft.operators.SimilarityOps.semAssignTable(inc, cents)
-              .repartition(col("vec_id")))
-          // the commit guard (vec-store semi-join on the verified pairs)
-          // keeps orphan sem_asg rows from a crashed-and-abandoned drop
-          // out of the pair table — see semPairsIncrementalFromAssign
-          // with no commit table yet (first drop, including its
-          // crash-retry where sem_asg landed but emb_vecs did not) the
-          // legitimate commit set is EMPTY: any stored assignment row is
-          // either an orphan or re-admitted in this very increment (whose
-          // pairs re-derive as new-new)
-          val semPairs = graft.core.GraftCaches.acquire(
-            graft.operators.SimilarityOps
-              .semPairsIncrementalFromAssign(storedAsg, freshAsg, semThreshold,
-                commitIds = Some(
-                  if (storeExists)
-                    readStore(spark, embVecsPath(warehouse)).select("vec_id")
-                  else inc.select("vec_id").limit(0))))
-          stampThresholdAt(spark, semPairsPath(warehouse), semThreshold)
-          appendKeyedStore(spark, semPairs, semPairsPath(warehouse),
-            storeBuckets, keys = Seq("vec_a", "vec_b"))
-          if (!semPairs.isEmpty)
-            updateLabels(spark, semCcPath(warehouse), semPairsPath(warehouse),
-              semPairs, "vec_a", "vec_b", storeBuckets)
-          appendKeyedStore(spark, freshAsg, semAsgPath(warehouse),
-            storeBuckets, keys = Seq("cid", "vec_id"), bucketKeys = Seq("cid"))
-        }
-        // the band table is created first, so its create can be the one a
-        // crash cut (as in run())
-        healTornCreate(spark, embBandsPath(warehouse))
-        graft.operators.SimilarityOps.appendEmbSignatureStoreBucketed(inc,
-          embBandsPath(warehouse), embVecsPath(warehouse),
-          buckets = storeBuckets)
-        (Seq(embBandsPath(warehouse), embVecsPath(warehouse)) ++
-          (if (trainedCentroids.isDefined) Seq(semAsgPath(warehouse))
-           else Nil)).foreach(p =>
-          Sinks.compactBucketedIfFragmented(spark, p))
-        (nNew, nPairs)
-      }
-    }
-  }
+    ingestVia(spark, drop, warehouse,
+      embeddingDrops(threshold, trainedCentroids, semThreshold), storeBuckets,
+      maxBucketCandidates, hotBucketSalt)
 
   /** GOVERNANCE DELETE for the embedding modality — `delete`'s cascade over
     * the embedding tables, kept as a SEPARATE entry point because vec_id
@@ -549,56 +222,417 @@ object CorpusIngest {
     */
   def deleteEmbeddings(spark: SparkSession, warehouse: String,
                        vecIds: Seq[Long]): Map[String, (Long, Long)] =
-      graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
-    import spark.implicits._
-    val keys = vecIds.toDF("vec_id")
-    val byVecId = Seq(
-      "emb_vecs" -> embVecsPath(warehouse),
-      "emb_bands" -> embBandsPath(warehouse),
-      "sem_asg" -> semAsgPath(warehouse),
-      "staged_emb_drops" -> stagedEmbPath(warehouse))
-    val purged = byVecId.flatMap { case (name, p) =>
-      if (!keyedStorePresent(spark, p)) None
-      else Some(name -> Sinks.deleteBucketedByKey(spark, p, keys, Seq("vec_id")))
-    }.toMap
-    val tomb = Governance.tombstoneWithCounts(spark, embTombPath(warehouse), keys,
-      Seq("vec_id"))
-    // pair-row removal can split components — drop the label stores, then
-    // rebuild them eagerly from the purged pair tables (see the text
-    // cascade's crash-ordering note)
-    dropStore(spark, embCcPath(warehouse))
-    dropStore(spark, semCcPath(warehouse))
-    val pairTables = Seq(
-      "emb_pairs" -> embPairsPath(warehouse),
-      "sem_pairs" -> semPairsPath(warehouse))
-    val all = purged ++ pairTables.flatMap { case (name, p) =>
-      if (!keyedStorePresent(spark, p)) None
-      else Some(name -> Sinks.deleteBucketedByAnyKey(spark, p, keys, "vec_id",
-        Seq("vec_a", "vec_b")))
-    }
-    rebuildLabels(spark, embCcPath(warehouse), embPairsPath(warehouse),
-      "vec_a", "vec_b")
-    rebuildLabels(spark, semCcPath(warehouse), semPairsPath(warehouse),
-      "vec_a", "vec_b")
-    Governance.appendAudit(spark, warehouse, "delete_embeddings", "vec_id",
-      vecIds.size.toLong, all + ("emb_tombstones" -> tomb))
-    all
-  }
+    deleteVia(spark, warehouse, EmbeddingModality, vecIds)
 
   /** `reinstate` for the embedding modality (see `reinstate`'s asymmetry
     * note: lifts the block, never resurrects data). */
   def reinstateEmbeddings(spark: SparkSession, warehouse: String,
                           vecIds: Seq[Long]): Long =
-      graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
-    if (!Sinks.storePresent(spark, embTombPath(warehouse))) 0L
+    reinstateVia(spark, warehouse, EmbeddingModality, vecIds)
+
+  // ---- the one corpus drop path ------------------------------------------
+  //
+  // Text, embedding and media drops, takedowns, reinstates and survivor
+  // views each run ONE body below. A modality is data: its warehouse
+  // layout (CorpusStore.Modality) and, for ingest, the operator hooks of a
+  // `Drops` description built from the entry point's own parameters. The
+  // bodies never ask which modality they serve, so the crash ordering is
+  // written once and cannot drift between modalities.
+
+  /** How one modality's drop derives and lands its state; `ingestVia`
+    * runs the hooks in its fixed order.
+    *   - `cutoff`: the pair table's provenance (its `._threshold` value);
+    *   - `geometry`: the band store's `._params` line;
+    *   - `refuse`: further refusals before any work, given whether the
+    *     commit table exists;
+    *   - `dedup`: within-drop dedup of the trimmed drop;
+    *   - `prepare`: per-drop frames derived once from the increment;
+    *   - `overflow`: the band store's buckets holding more than a cap;
+    *   - `firstPairs` / `pairsAgainst`: the increment's verified pairs on
+    *     a first drop / against the stored corpus (hot buckets, salt);
+    *   - `beforeCommit`: appends that land before the commit point, given
+    *     whether the commit table exists;
+    *   - `land`: the signature-store append, the commit table last;
+    *   - `compacted`: the tables the fragmentation gate maintains.
+    */
+  private final case class Drops[P](
+      m: Modality,
+      cutoff: Double,
+      geometry: Seq[(String, String)],
+      refuse: (SparkSession, String, Boolean) => Unit = (_, _, _) => (),
+      dedup: DataFrame => DataFrame,
+      prepare: DataFrame => P,
+      overflow: (DataFrame, Int) => DataFrame,
+      firstPairs: P => DataFrame,
+      pairsAgainst: (SparkSession, String, P, Option[DataFrame], Int) => DataFrame,
+      beforeCommit: (SparkSession, String, P, Boolean, Int) => Unit =
+        (_: SparkSession, _: String, _: P, _: Boolean, _: Int) => (),
+      land: (SparkSession, String, P, Int) => Unit,
+      compacted: Seq[String => String])
+
+  private def textDrops(threshold: Double) = Drops[DataFrame](TextModality,
+    cutoff = threshold,
+    geometry = DedupOps.minhashParams(64, 16),
+    // exact duplicate rows within one drop (an at-least-once crawl
+    // re-emits a doc) collapse; conflicting texts under one doc_id remain
+    // a caller bug (the doc model is id-immutable)
+    dedup = _.dropDuplicates(),
+    prepare = identity,
+    overflow = DedupOps.overflowingBuckets,
+    firstPairs = DedupOps.minhashLsh(_, threshold),
+    pairsAgainst = (spark, wh, inc, hot, salt) =>
+      DedupOps.minhashLshIncremental(readStore(spark, bandPath(wh)),
+        readStore(spark, shinglePath(wh)), inc, threshold,
+        excludeBuckets = hot, saltHotBuckets = salt),
+    // documents and doc_stats are doc_id-keyed cumulative tables too;
+    // bucketed on doc_id, the table side of each append's anti-join plans
+    // no exchange
+    beforeCommit = (spark, wh, inc, _, buckets) => {
+      appendKeyedStore(spark, inc, docsPath(wh), buckets)
+      appendKeyedStore(spark, docStats(inc), statsPath(wh), buckets)
+    },
+    // bands first, the shingle table (the trim key) last; the band table
+    // is created first, so its create can be the one a crash cut
+    land = (spark, wh, inc, buckets) => {
+      healTornCreate(spark, bandPath(wh))
+      DedupOps.appendSignatureStoreBucketed(inc, bandPath(wh),
+        shinglePath(wh), buckets = buckets)
+    },
+    compacted = Seq(bandPath, shinglePath))
+
+  private def embeddingDrops(threshold: Double,
+                             trainedCentroids: Option[DataFrame],
+                             semThreshold: Double) =
+    Drops[DataFrame](EmbeddingModality,
+      cutoff = threshold,
+      geometry = SimilarityOps.embLshParams(6, 48, 64),
+      // SemDeDup COVERAGE: a partial assignment store silently misses
+      // semantic pairs forever, so the two ways to create one are both
+      // errors. (1) Enabling sem maintenance on a warehouse that already
+      // holds vectors the store never assigned — run retrainSemStore
+      // first to cover them. (2) A sem-maintained warehouse receiving a
+      // drop WITHOUT centroids — that drop's vectors would never enter
+      // sem_asg.
+      refuse = (spark, wh, storeExists) => {
+        val semAsgExists = keyedStorePresent(spark, semAsgPath(wh))
+        trainedCentroids match {
+          case Some(cents) =>
+            require(semAsgExists || !storeExists,
+              s"ingestEmbeddings: ${semAsgPath(wh)} is missing but the " +
+                "vector store already has vectors the assignment store " +
+                "would never cover — run retrainSemStore(warehouse) to " +
+                "build sem_asg over the existing corpus before " +
+                "sem-maintained drops")
+            checkThresholdAt(spark, semPairsPath(wh), "corpus/sem_pairs",
+              semThreshold)
+            // frozen-centroid identity: a drop assigned under different
+            // centroids than sem_asg was built with fragments clusters
+            // silently — pin the centroid fingerprint the way the band
+            // stores pin their hash geometry
+            Sinks.checkAndStampParams(spark, semAsgPath(wh),
+              Seq("cents_fp" ->
+                SimilarityOps.centroidFingerprint(cents).toString))
+          case None =>
+            require(!semAsgExists,
+              s"ingestEmbeddings: ${semAsgPath(wh)} exists — this " +
+                "warehouse is sem-maintained, and a drop ingested without " +
+                "trainedCentroids would leave its vectors out of the " +
+                "assignment store forever (pass the centroids, or drop " +
+                "the sem store to stop maintaining it)")
+        }
+      },
+      dedup = _.dropDuplicates("vec_id"),
+      prepare = identity,
+      overflow = SimilarityOps.overflowingCodeBuckets,
+      firstPairs = SimilarityOps.cosinePairsLsh(_, threshold),
+      pairsAgainst = (spark, wh, inc, hot, salt) =>
+        SimilarityOps.cosinePairsLshIncremental(
+          readStore(spark, embBandsPath(wh)),
+          readStore(spark, embVecsPath(wh)), inc, threshold,
+          excludeBuckets = hot, saltHotBuckets = salt),
+      beforeCommit = (spark, wh, inc, storeExists, buckets) =>
+        trainedCentroids.foreach(semMaintain(spark, wh, inc, _, semThreshold,
+          storeExists, buckets)),
+      // the band table is created first, so its create can be the one a
+      // crash cut
+      land = (spark, wh, inc, buckets) => {
+        healTornCreate(spark, embBandsPath(wh))
+        SimilarityOps.appendEmbSignatureStoreBucketed(inc, embBandsPath(wh),
+          embVecsPath(wh), buckets = buckets)
+      },
+      compacted = Seq[String => String](embBandsPath, embVecsPath) ++
+        (if (trainedCentroids.isDefined) Seq(semAsgPath _) else Nil))
+
+  /** SemDeDup maintenance for one embedding drop, under FROZEN trained
+    * centroids (the retrain-cadence contract — see
+    * SimilarityOps.semAssignTable): assign the increment once, derive
+    * within-cluster pairs against the persisted assignment store, append
+    * pairs + assignments. All of it lands BEFORE the vec-store commit
+    * point, so a crash anywhere here re-admits the vecs on retry and these
+    * keyed appends no-op what already landed.
+    */
+  private def semMaintain(spark: SparkSession, wh: String, inc: DataFrame,
+                          cents: DataFrame, semThreshold: Double,
+                          storeExists: Boolean, buckets: Int): Unit = {
+    val storedAsg =
+      if (keyedStorePresent(spark, semAsgPath(wh)))
+        readStore(spark, semAsgPath(wh))
+      // first drop: an empty store with the right schema — the
+      // incremental path then derives new-new pairs only
+      else SimilarityOps.semAssignTable(inc.limit(0), cents)
+    // ONE broadcast-assign pass per drop: the persisted frame feeds the
+    // pair derivation (both join branches) AND the store append
+    val freshAsg = graft.core.GraftCaches.acquire(
+      SimilarityOps.semAssignTable(inc, cents).repartition(col("vec_id")))
+    // the commit guard (vec-store semi-join on the verified pairs) keeps
+    // orphan sem_asg rows from a crashed-and-abandoned drop out of the
+    // pair table — see semPairsIncrementalFromAssign. With no commit
+    // table yet (first drop, including its crash-retry where sem_asg
+    // landed but emb_vecs did not) the legitimate commit set is EMPTY:
+    // any stored assignment row is either an orphan or re-admitted in
+    // this very increment (whose pairs re-derive as new-new)
+    val semPairs = graft.core.GraftCaches.acquire(
+      SimilarityOps.semPairsIncrementalFromAssign(storedAsg, freshAsg,
+        semThreshold, commitIds = Some(
+          if (storeExists) readStore(spark, embVecsPath(wh)).select("vec_id")
+          else inc.select("vec_id").limit(0))))
+    stampThresholdAt(spark, semPairsPath(wh), semThreshold)
+    appendKeyedStore(spark, semPairs, semPairsPath(wh), buckets,
+      keys = Seq("vec_a", "vec_b"))
+    if (!semPairs.isEmpty)
+      updateLabels(spark, semCcPath(wh), semPairsPath(wh), semPairs,
+        "vec_a", "vec_b", buckets)
+    appendKeyedStore(spark, freshAsg, semAsgPath(wh), buckets,
+      keys = Seq("cid", "vec_id"), bucketKeys = Seq("cid"))
+  }
+
+  private def mediaDrops(maxHamming: Int) =
+    Drops[(DataFrame, DataFrame)](MediaModality,
+      cutoff = maxHamming.toDouble,
+      // chunk count = maxHamming + 1: the pair ledger alone would not
+      // catch a cut drift against a band store stamped by a direct
+      // appendPhashStoreBucketed user before any pair table existed
+      geometry = Seq("maxHamming" -> maxHamming.toString),
+      dedup = _.dropDuplicates("media_id"),
+      // ONE decode pass: (hashes, bands) feed pairing and the landing
+      prepare = { inc =>
+        val hashes = graft.core.GraftCaches.acquire(
+          Multimodal.imageHashes(inc).repartition(col("media_id")))
+        (hashes, graft.core.GraftCaches.acquire(
+          Multimodal.phashBandTableFromHashes(hashes, maxHamming)))
+      },
+      overflow = Multimodal.overflowingChunkBuckets,
+      firstPairs = { case (hashes, _) => Multimodal.nearDupFromHashes(
+        hashes.filter(col("phash").isNotNull && col("phash") =!= -1L),
+        maxHamming) },
+      pairsAgainst = (spark, wh, hb, hot, salt) =>
+        Multimodal.phashIncrementalFromBands(
+          readStore(spark, mediaBandsPath(wh)), hb._2, maxHamming,
+          // commit guard: only store rows whose id reached the hash
+          // commit table may pair — orphan band rows from a crashed,
+          // never-retried drop emit no ghosts
+          commitIds =
+            Some(readStore(spark, mediaHashPath(wh)).select("media_id")),
+          excludeBuckets = hot, saltHotBuckets = salt),
+      // bands before the hash commit point; same prefix-keyed
+      // exchange-free existence check as appendPhashStoreBucketed. The
+      // hash table records EVERY id, undecodable payloads included, so a
+      // broken image is decoded once and then trimmed forever
+      land = (spark, wh, hb, buckets) => {
+        appendKeyedStore(spark, hb._2, mediaBandsPath(wh), buckets,
+          keys = Seq("ci", "chunk", "media_id"), bucketKeys = Seq("ci", "chunk"))
+        appendKeyedStore(spark, hb._1, mediaHashPath(wh), buckets,
+          keys = Seq("media_id"))
+      },
+      compacted = Seq(mediaBandsPath, mediaHashPath))
+
+  /** The one drop body behind `run`, `ingestEmbeddings` and `ingestMedia`:
+    * lease → park-aware presence → refusals → trim → within-drop dedup →
+    * lineage cut → hot-bucket cap and capped ledger → pairs → threshold
+    * stamp → pair append → label update → pre-commit appends →
+    * commit-point landing → compaction. Returns (new rows landed, new
+    * verified pairs).
+    */
+  private def ingestVia[P](spark: SparkSession, drop: DataFrame, wh: String,
+                           d: Drops[P], buckets: Int,
+                           maxBucketCandidates: Option[Int],
+                           hotBucketSalt: Int): (Long, Long) =
+      // every mutating entry point holds the warehouse write lease: a
+      // second concurrent drop would pass the trim against a store missing
+      // this drop's increment and silently lose cross-drop pairs — the
+      // lease turns that silent gap into a fail-fast (WarehouseLease doc)
+      graft.core.WarehouseLease.withWriteLease(spark, wh) {
+    val m = d.m
+    // park-aware presence (keyedStorePresent, not raw pathExists): a crash-
+    // parked commit table read as ABSENT would silently take the
+    // first-drop branch — no trim, batch pair derivation — and every
+    // new-old pair against the existing corpus would be lost forever.
+    // Under the lease just taken, the park heals in-line, and so does an
+    // interrupted first create.
+    val storeExists = keyedStorePresent(spark, m.commit(wh))
+    // every refusal fires BEFORE any work. Mixed thresholds: a pair row
+    // carries no threshold, so appends under a different cut-off would
+    // silently corrupt the cumulative table's semantics. Geometry: a band
+    // store built under different hash geometry would yield garbage
+    // candidates and conflicting signature rows. Both ledgers are
+    // stamp-first on the first drop.
+    checkThresholdAt(spark, m.pairs(wh), "corpus/" + tableName(m.pairs(wh)),
+      d.cutoff)
+    d.refuse(spark, wh, storeExists)
+    Sinks.checkAndStampParams(spark, m.bands(wh), d.geometry)
+    // scope the dedup operators' internal persists to this drop: every
+    // consuming action happens inside, so a long-running ingest service
+    // doesn't accumulate one MEMORY_AND_DISK frame set per drop (callers'
+    // own caches are untouched)
+    graft.core.GraftCaches.withScope(spark) {
+      // the within-drop dedup runs AFTER the trim: it shuffles its input,
+      // and pre-trim that input is the caller's frame at full size
+      // (promoteAndIngest passes the CUMULATIVE staged table)
+      val trimmed =
+        if (!storeExists) drop
+        else drop.join(readStore(spark, m.commit(wh)).select(m.idCol),
+          Seq(m.idCol), "left_anti")
+      // the increment feeds pair derivation AND the landing write, and its
+      // defining anti-join READS the store the landing WRITES — Spark's
+      // CacheManager recaches path-reading plans on write (a persist would
+      // silently recompute the increment as EMPTY after the store append),
+      // so cut lineage entirely with an eager checkpoint (reliable when
+      // spark.graft.checkpointDir is configured); the increment is
+      // drop-bounded
+      val inc = graft.core.Checkpoints.cut(d.dedup(trimmed))
+      val nNew = inc.count()
+      if (nNew == 0) (0L, 0L)
+      else {
+        val prepared = d.prepare(inc)
+        // HOT-BUCKET cap: the exchange-free store join opts out of AQE skew
+        // splitting, so a flood concentrated in one band bucket would
+        // concentrate every later drop on one task. When capped, the
+        // overflowing buckets are excluded from the probe and RECORDED in
+        // the capped ledger — the recall trade is auditable, never silent.
+        // Salt mode derives the hot buckets' pairs through a salted branch
+        // instead (no recall trade, nothing recorded).
+        val hot = maxBucketCandidates.flatMap { cap =>
+          if (!storeExists) None
+          else Some(graft.core.GraftCaches.acquire(
+            d.overflow(readStore(spark, m.bands(wh)), cap)))
+        }
+        if (hotBucketSalt <= 0)
+          hot.filter(h => !h.isEmpty).foreach(h =>
+            Sinks.idempotentAppend(h, m.capped(wh), keys = m.cappedKeys,
+              partitionCols = Nil))
+        // persisted: the pair frame feeds the count, the keyed append, and
+        // the label-store merge (scope-released with the drop)
+        val pairs = graft.core.GraftCaches.acquire(
+          if (!storeExists) d.firstPairs(prepared)
+          else d.pairsAgainst(spark, wh, prepared, hot, hotBucketSalt))
+        val nPairs = pairs.count()
+        // stamp BEFORE the pairs land: a crash between an unstamped append
+        // and the stamp would let a later run at a different threshold slip
+        // past the check — the stamp-first order fails closed
+        stampThresholdAt(spark, m.pairs(wh), d.cutoff)
+        appendKeyedStore(spark, pairs, m.pairs(wh), buckets,
+          keys = m.pairCols)
+        // fold the drop's pairs into the label store — work bounded by
+        // touched components, so survivors never re-runs the full-graph
+        // contraction
+        if (nPairs > 0)
+          updateLabels(spark, m.labels(wh), m.pairs(wh), pairs,
+            m.pairCols(0), m.pairCols(1), buckets)
+        // the commit table goes LAST: it is the trim's existence key, so
+        // its append is the drop's COMMIT POINT. A crash anywhere earlier
+        // leaves the row absent — the retry re-admits it through the trim
+        // and every keyed append above no-ops the rows that already
+        // landed. Writing the trim key any earlier would strand a
+        // half-ingested row forever.
+        d.beforeCommit(spark, wh, prepared, storeExists, buckets)
+        d.land(spark, wh, prepared, buckets)
+        // maintenance: every drop appends one file set per table, and the
+        // NEXT increment re-reads the whole store. Atomic swap through the
+        // bucketed writer, scan-identical data.
+        d.compacted.foreach(t =>
+          Sinks.compactBucketedIfFragmented(spark, t(wh)))
+        (nNew, nPairs)
+      }
+    }
+  }
+
+  /** The one takedown cascade behind `delete`, `deleteEmbeddings` and
+    * `deleteMedia` (and `forget`): purge the id-keyed tables, tombstone
+    * the ids, drop the label stores, purge the pair tables on either
+    * side, rebuild the label stores, audit. Returns per-table
+    * (rowsBefore, rowsAfter).
+    */
+  private[app] def deleteVia(spark: SparkSession, wh: String, m: Modality,
+                             ids: Seq[Long]): Map[String, (Long, Long)] =
+      graft.core.WarehouseLease.withWriteLease(spark, wh) {
+    import spark.implicits._
+    val keys = ids.toDF(m.idCol)
+    // park-aware (keyedStorePresent): a parked table read as absent would
+    // silently SKIP its purge — a takedown that leaves fingerprints
+    def purge(tables: Seq[String => String])(
+        del: String => (Long, Long)): Map[String, (Long, Long)] =
+      tables.flatMap { t =>
+        val p = t(wh)
+        if (!keyedStorePresent(spark, p)) None else Some(tableName(p) -> del(p))
+      }.toMap
+    val purged =
+      purge(m.keyed)(Sinks.deleteBucketedByKey(spark, _, keys, Seq(m.idCol)))
+    // tombstone UNCONDITIONALLY: gating this on the staged table existing
+    // left a hole — a takedown issued while a streaming landing was active
+    // but before its first promotion recorded nothing, and that first
+    // promotion then re-staged and re-ingested the deleted row. The batch
+    // path never consults tombstones, so the only cost of a spurious
+    // tombstone is a row in a thin table.
+    val tomb = Governance.tombstoneWithCounts(spark, m.tombs(wh), keys,
+      Seq(m.idCol))
+    // removed pair rows can SPLIT components — incremental merge cannot
+    // express a split, so the label stores are dropped here (every crash
+    // window below then falls back to the recompute, never a stale
+    // labeling) and rebuilt EAGERLY from the purged pair tables at the end
+    val pairTables = (m.pairs, m.labels) +: m.derivedPairs
+    pairTables.foreach { case (_, labels) => dropStore(spark, labels(wh)) }
+    val all = purged ++ purge(pairTables.map(_._1))(
+      Sinks.deleteBucketedByAnyKey(spark, _, keys, m.idCol, m.pairCols))
+    pairTables.foreach { case (pairs, labels) =>
+      rebuildLabels(spark, labels(wh), pairs(wh), m.pairCols(0), m.pairCols(1))
+    }
+    Governance.appendAudit(spark, wh, m.deleteOp, m.idCol, ids.size.toLong,
+      all + (tableName(m.tombs(wh)) -> tomb))
+    all
+  }
+
+  /** The one tombstone lift behind `reinstate`, `reinstateEmbeddings` and
+    * `reinstateMedia`; returns the number of tombstones lifted. */
+  private def reinstateVia(spark: SparkSession, wh: String, m: Modality,
+                           ids: Seq[Long]): Long =
+      graft.core.WarehouseLease.withWriteLease(spark, wh) {
+    if (!Sinks.storePresent(spark, m.tombs(wh))) 0L
     else {
       import spark.implicits._
-      val (before, after) = Sinks.deleteByKey(spark, embTombPath(warehouse),
-        vecIds.toDF("vec_id"), Seq("vec_id"))
-      Governance.appendAudit(spark, warehouse, "reinstate_embeddings", "vec_id",
-        vecIds.size.toLong, Map("emb_tombstones" -> (before, after)))
+      val (before, after) = Sinks.deleteByKey(spark, m.tombs(wh),
+        ids.toDF(m.idCol), Seq(m.idCol))
+      Governance.appendAudit(spark, wh, m.reinstateOp, m.idCol,
+        ids.size.toLong, Map(tableName(m.tombs(wh)) -> (before, after)))
       before - after
     }
+  }
+
+  /** The one deduplicated view: the modality's rows minus the
+    * non-minimum members of each component over `pairs`. Losers come off
+    * the incrementally-maintained label store when present (a co-located
+    * scan); the full-graph recompute is the fallback.
+    */
+  private def survivorsVia(spark: SparkSession, wh: String, m: Modality,
+                           pairs: String => String,
+                           labels: String => String): DataFrame = {
+    val rows = m.rows(spark, wh)
+    // lease-free view: storePresent FAILS on a crash-parked pair table
+    // instead of silently serving every duplicate (run repair() first)
+    if (!Sinks.storePresent(spark, pairs(wh))) rows
+    else rows.join(
+      losersFor(spark, labels(wh), pairs(wh), m.pairCols(0), m.pairCols(1),
+        m.idCol),
+      Seq(m.idCol), "left_anti")
   }
 
   /** Per-document stat partials for the increment — thin rows (ids +
@@ -763,15 +797,9 @@ object CorpusIngest {
                        storeBuckets: Int = 8,
                        maxBucketCandidates: Option[Int] = None,
                        hotBucketSalt: Int = 0): (Long, Long) =
-    // lease taken HERE (not only in the nested run) so the promote, the
-    // tombstone purge, and the ingest are one exclusive unit; the nested
-    // run() re-enters the same JVM lease at depth 2
-    graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
-      promoteAndIngestVia(spark, landingPath, stagedPath(warehouse),
-        tombPath(warehouse), "doc_id", storeBuckets,
-        staged => run(spark, staged, warehouse, threshold, storeBuckets,
-          maxBucketCandidates, hotBucketSalt))
-    }
+    promoteAndIngestVia(spark, landingPath, warehouse, TextModality,
+      storeBuckets, run(spark, _, warehouse, threshold, storeBuckets,
+        maxBucketCandidates, hotBucketSalt))
 
   /** `promoteAndIngest` for the EMBEDDING modality — the batch half of
     * `startEmbeddingLanding`'s rhythm, with the same crash ledgers and
@@ -789,13 +817,10 @@ object CorpusIngest {
                                  maxBucketCandidates: Option[Int] = None,
                                  hotBucketSalt: Int = 0)
       : (Long, Long) =
-    graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
-      promoteAndIngestVia(spark, landingPath, stagedEmbPath(warehouse),
-        embTombPath(warehouse), "vec_id", storeBuckets,
-        staged => ingestEmbeddings(spark, staged, warehouse, threshold,
-          storeBuckets, trainedCentroids, semThreshold, maxBucketCandidates,
-          hotBucketSalt))
-    }
+    promoteAndIngestVia(spark, landingPath, warehouse, EmbeddingModality,
+      storeBuckets, ingestEmbeddings(spark, _, warehouse, threshold,
+        storeBuckets, trainedCentroids, semThreshold, maxBucketCandidates,
+        hotBucketSalt))
 
   /** `promoteAndIngest` for the MEDIA modality — the batch half of
     * `startMediaLanding`'s rhythm. Decode/hash work happens here, on the
@@ -807,12 +832,9 @@ object CorpusIngest {
                             maxBucketCandidates: Option[Int] = None,
                             hotBucketSalt: Int = 0)
       : (Long, Long) =
-    graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
-      promoteAndIngestVia(spark, landingPath, stagedMediaPath(warehouse),
-        mediaTombPath(warehouse), "media_id", storeBuckets,
-        staged => ingestMedia(spark, staged, warehouse, maxHamming,
-          storeBuckets, maxBucketCandidates, hotBucketSalt))
-    }
+    promoteAndIngestVia(spark, landingPath, warehouse, MediaModality,
+      storeBuckets, ingestMedia(spark, _, warehouse, maxHamming, storeBuckets,
+        maxBucketCandidates, hotBucketSalt))
 
   /** The modality-agnostic promote → tombstone-purge → ingest step all
     * three `promoteAndIngest*` entry points share (the landing/promote/
@@ -820,10 +842,16 @@ object CorpusIngest {
     * this factors the crash ledgers and purge so they cannot drift apart).
     */
   private def promoteAndIngestVia(spark: SparkSession, landingPath: String,
-                                  staged: String, tombs: String,
-                                  keyCol: String, storeBuckets: Int,
+                                  warehouse: String, m: Modality,
+                                  storeBuckets: Int,
                                   ingest: DataFrame => (Long, Long))
-      : (Long, Long) = {
+      : (Long, Long) =
+      // lease taken HERE (not only in the nested ingest) so the promote,
+      // the tombstone purge, and the ingest are one exclusive unit; the
+      // nested ingest re-enters the same JVM lease at depth 2
+      graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
+    val staged = m.staged(warehouse)
+    val tombs = m.tombs(warehouse)
     // a maintenance cadence can legitimately fire before the landing's
     // stream has committed its first trigger (no _spark_metadata yet) —
     // that is "nothing to promote", not an error; Sinks.promote's require
@@ -835,8 +863,8 @@ object CorpusIngest {
     // ingest trim below are co-located on the bucket layout instead of
     // re-shuffling the mirror
     healTornCreate(spark, staged)
-    Sinks.promote(spark, landingPath, staged, keys = Seq(keyCol),
-      bucketSpec = Some(Seq(keyCol) -> storeBuckets))
+    Sinks.promote(spark, landingPath, staged, keys = Seq(m.idCol),
+      bucketSpec = Some(Seq(m.idCol) -> storeBuckets))
     if (!Sinks.storePresent(spark, staged)) return (0L, 0L)
     val promotedUpto = readLongLedger(spark, staged + "._promoted_upto")
     val ingLedger = staged + "._ingested_upto"
@@ -847,7 +875,7 @@ object CorpusIngest {
     if (Sinks.storePresent(spark, tombs)) {
       Sinks.freshenIfRewritten(spark, tombs)
       Sinks.deleteBucketedByKey(spark, staged, spark.read.parquet(tombs),
-        Seq(keyCol))
+        Seq(m.idCol))
     }
     val res = ingest(readStore(spark, staged))
     writeLongLedger(spark, ingLedger, promotedUpto)
@@ -865,27 +893,14 @@ object CorpusIngest {
     * scan); the full-graph recompute is the fallback.
     */
   def embSurvivors(spark: SparkSession, warehouse: String): DataFrame =
-    survivorsOverPairs(spark, warehouse, embPairsPath(warehouse),
-      embCcPath(warehouse))
+    survivorsVia(spark, warehouse, EmbeddingModality, embPairsPath, embCcPath)
 
   /** The SemDeDup-applied view: keep-the-minimum per semantic cluster
     * component over the cumulative `corpus/sem_pairs` table — the corpus a
     * SemDeDup-curated training run actually reads.
     */
   def semSurvivors(spark: SparkSession, warehouse: String): DataFrame =
-    survivorsOverPairs(spark, warehouse, semPairsPath(warehouse),
-      semCcPath(warehouse))
-
-  private def survivorsOverPairs(spark: SparkSession, warehouse: String,
-                                 pairsP: String, labelP: String): DataFrame = {
-    val vecs = readStore(spark, embVecsPath(warehouse))
-    // lease-free view: storePresent FAILS on a crash-parked pair table
-    // instead of silently serving the corpus unfiltered
-    if (!Sinks.storePresent(spark, pairsP)) vecs
-    else vecs.join(
-      losersFor(spark, labelP, pairsP, "vec_a", "vec_b", "vec_id"),
-      Seq("vec_id"), "left_anti")
-  }
+    survivorsVia(spark, warehouse, EmbeddingModality, semPairsPath, semCcPath)
 
   /** Land one MEDIA drop — the image-modality twin of `run` /
     * `ingestEmbeddings`: trim the drop against the hash store (replayed
@@ -908,86 +923,8 @@ object CorpusIngest {
                   storeBuckets: Int = 8,
                   maxBucketCandidates: Option[Int] = None,
                   hotBucketSalt: Int = 0): (Long, Long) =
-      graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
-    // park-aware like run(): a parked hash store must not flip this drop
-    // into the first-drop branch; an interrupted first create heals like
-    // run()'s
-    val storeExists = keyedStorePresent(spark, mediaHashPath(warehouse))
-    checkThresholdAt(spark, mediaPairsPath(warehouse), "corpus/media_pairs",
-      maxHamming.toDouble)
-    // band-store geometry ledger too (chunk count = maxHamming + 1): the
-    // pair ledger alone would not catch a cut drift against a band store
-    // stamped by a direct appendPhashStoreBucketed user before any pair
-    // table existed
-    Sinks.checkAndStampParams(spark, mediaBandsPath(warehouse),
-      Seq("maxHamming" -> maxHamming.toString))
-    graft.core.GraftCaches.withScope(spark) {
-      val newMedia =
-        (if (!storeExists) drop
-         else drop.join(
-           readStore(spark, mediaHashPath(warehouse)).select("media_id"),
-           Seq("media_id"), "left_anti"))
-          .dropDuplicates("media_id")
-      val inc = graft.core.Checkpoints.cut(newMedia)
-      val nNew = inc.count()
-      if (nNew == 0) (0L, 0L)
-      else {
-        // ONE decode pass: the hash frame feeds banding, pairing, and the
-        // commit-point append
-        val hashes = graft.core.GraftCaches.acquire(
-          graft.operators.Multimodal.imageHashes(inc)
-            .repartition(col("media_id")))
-        val freshBands = graft.core.GraftCaches.acquire(
-          graft.operators.Multimodal.phashBandTableFromHashes(hashes,
-            maxHamming))
-        // hot-bucket cap + ledger on (ci, chunk), the text path's device
-        val hot = maxBucketCandidates.flatMap { cap =>
-          if (!storeExists) None
-          else Some(graft.core.GraftCaches.acquire(
-            graft.operators.Multimodal.overflowingChunkBuckets(
-              readStore(spark, mediaBandsPath(warehouse)), cap)))
-        }
-        // salt mode derives the hot buckets' pairs (no recall trade) — the
-        // capped ledger records only genuine skips
-        if (hotBucketSalt <= 0)
-          hot.filter(h => !h.isEmpty).foreach(h =>
-            Sinks.idempotentAppend(h, mediaCappedPath(warehouse),
-              keys = Seq("ci", "chunk"), partitionCols = Nil))
-        val pairs = graft.core.GraftCaches.acquire(
-          if (!storeExists) graft.operators.Multimodal.nearDupFromHashes(
-            hashes.filter(col("phash").isNotNull && col("phash") =!= -1L),
-            maxHamming)
-          else graft.operators.Multimodal.phashIncrementalFromBands(
-            readStore(spark, mediaBandsPath(warehouse)), freshBands,
-            maxHamming,
-            // commit guard: only store rows whose id reached the hash
-            // commit table may pair — orphan band rows from a crashed,
-            // never-retried drop emit no ghosts
-            commitIds =
-              Some(readStore(spark, mediaHashPath(warehouse)).select("media_id")),
-            excludeBuckets = hot,
-            saltHotBuckets = hotBucketSalt))
-        val nPairs = pairs.count()
-        stampThresholdAt(spark, mediaPairsPath(warehouse), maxHamming.toDouble)
-        appendKeyedStore(spark, pairs, mediaPairsPath(warehouse), storeBuckets,
-          keys = Seq("media_a", "media_b"))
-        if (nPairs > 0)
-          updateLabels(spark, mediaCcPath(warehouse),
-            mediaPairsPath(warehouse), pairs, "media_a", "media_b",
-            storeBuckets)
-        // bands before the hash commit point; same prefix-keyed
-        // exchange-free existence check as appendPhashStoreBucketed
-        appendKeyedStore(spark, freshBands, mediaBandsPath(warehouse),
-          storeBuckets, keys = Seq("ci", "chunk", "media_id"),
-          bucketKeys = Seq("ci", "chunk"))
-        appendKeyedStore(spark, hashes, mediaHashPath(warehouse),
-          storeBuckets, keys = Seq("media_id"))
-        Seq(mediaBandsPath(warehouse), mediaHashPath(warehouse)).foreach(p =>
-          Sinks.compactBucketedIfFragmented(spark, p))
-        (nNew, nPairs)
-      }
-    }
-  }
+    ingestVia(spark, drop, warehouse, mediaDrops(maxHamming), storeBuckets,
+      maxBucketCandidates, hotBucketSalt)
 
   /** GOVERNANCE DELETE for the media modality: purges media_hashes /
     * media_bands / staged_media_drops on media_id (the recoverable
@@ -1000,47 +937,13 @@ object CorpusIngest {
     */
   def deleteMedia(spark: SparkSession, warehouse: String,
                   mediaIds: Seq[Long]): Map[String, (Long, Long)] =
-      graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
-    import spark.implicits._
-    val keys = mediaIds.toDF("media_id")
-    val byId = Seq(
-      "media_hashes" -> mediaHashPath(warehouse),
-      "media_bands" -> mediaBandsPath(warehouse),
-      "staged_media_drops" -> stagedMediaPath(warehouse))
-    val purged = byId.flatMap { case (name, p) =>
-      if (!keyedStorePresent(spark, p)) None
-      else Some(name -> Sinks.deleteBucketedByKey(spark, p, keys, Seq("media_id")))
-    }.toMap
-    val tomb = Governance.tombstoneWithCounts(spark, mediaTombPath(warehouse), keys,
-      Seq("media_id"))
-    dropStore(spark, mediaCcPath(warehouse))
-    val all =
-      if (!keyedStorePresent(spark, mediaPairsPath(warehouse))) purged
-      else purged + ("media_pairs" -> Sinks.deleteBucketedByAnyKey(spark,
-        mediaPairsPath(warehouse), keys, "media_id",
-        Seq("media_a", "media_b")))
-    rebuildLabels(spark, mediaCcPath(warehouse), mediaPairsPath(warehouse),
-      "media_a", "media_b")
-    Governance.appendAudit(spark, warehouse, "delete_media", "media_id",
-      mediaIds.size.toLong, all + ("media_tombstones" -> tomb))
-    all
-  }
+    deleteVia(spark, warehouse, MediaModality, mediaIds)
 
   /** `reinstate` for the media modality (lifts the block, never
     * resurrects data). */
   def reinstateMedia(spark: SparkSession, warehouse: String,
                      mediaIds: Seq[Long]): Long =
-      graft.core.WarehouseLease.withWriteLease(spark, warehouse) {
-    if (!Sinks.storePresent(spark, mediaTombPath(warehouse))) 0L
-    else {
-      import spark.implicits._
-      val (before, after) = Sinks.deleteByKey(spark, mediaTombPath(warehouse),
-        mediaIds.toDF("media_id"), Seq("media_id"))
-      Governance.appendAudit(spark, warehouse, "reinstate_media", "media_id",
-        mediaIds.size.toLong, Map("media_tombstones" -> (before, after)))
-      before - after
-    }
-  }
+    reinstateVia(spark, warehouse, MediaModality, mediaIds)
 
   /** The deduplicated MEDIA view: surviving (media_id, phash) rows under
     * keep-the-minimum per perceptual near-dup cluster over the cumulative
@@ -1052,16 +955,8 @@ object CorpusIngest {
     * ingest bookkeeping, not corpus members — a training-data view must
     * not ship media the pipeline itself could not decode.
     */
-  def mediaSurvivors(spark: SparkSession, warehouse: String): DataFrame = {
-    val hashes = readStore(spark, mediaHashPath(warehouse))
-      .filter(col("phash").isNotNull && col("phash") =!= lit(-1L))
-    // lease-free view: fail on a parked pair table, never serve unfiltered
-    if (!Sinks.storePresent(spark, mediaPairsPath(warehouse))) hashes
-    else hashes.join(
-      losersFor(spark, mediaCcPath(warehouse), mediaPairsPath(warehouse),
-        "media_a", "media_b", "media_id"),
-      Seq("media_id"), "left_anti")
-  }
+  def mediaSurvivors(spark: SparkSession, warehouse: String): DataFrame =
+    survivorsVia(spark, warehouse, MediaModality, mediaPairsPath, mediaCcPath)
 
   /** RETRAIN the SemDeDup state — the other half of the frozen-centroid
     * cadence `ingestEmbeddings(trainedCentroids = ...)` rides on: train
@@ -1153,16 +1048,8 @@ object CorpusIngest {
     * contraction runs only as the fallback (no drop has derived a pair
     * yet, or a crash cut the label store's create).
     */
-  def survivors(spark: SparkSession, warehouse: String): DataFrame = {
-    val docs = readStore(spark, docsPath(warehouse))
-    // lease-free view: storePresent FAILS on a crash-parked pair table
-    // instead of silently serving every duplicate (run repair() first)
-    if (!Sinks.storePresent(spark, pairsPath(warehouse))) docs
-    else docs.join(
-      losersFor(spark, ccLabelsPath(warehouse), pairsPath(warehouse),
-        "doc_a", "doc_b", "doc_id"),
-      Seq("doc_id"), "left_anti")
-  }
+  def survivors(spark: SparkSession, warehouse: String): DataFrame =
+    survivorsVia(spark, warehouse, TextModality, pairsPath, ccLabelsPath)
 
   // ---- re-exported public API --------------------------------------------
   //

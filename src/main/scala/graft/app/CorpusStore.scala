@@ -273,8 +273,9 @@ private[graft] object CorpusStore {
     val p = thresholdLedgerAt(pairsP)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     graft.core.AtomicFiles.readLine(fs, p).foreach { line =>
-      // empty = a pre-atomic writer's torn first stamp (stamps publish
-      // atomically now) — still refused loudly, delete-to-restamp
+      // empty = a torn first stamp (the atomic publish renames without
+      // fsync, so power loss can leave a zero-length file) — refused
+      // loudly, delete-to-restamp
       require(line.trim.nonEmpty,
         s"$label threshold ledger $p exists but is empty/corrupt — " +
           "delete it to restamp on the next run")
@@ -296,14 +297,6 @@ private[graft] object CorpusStore {
     if (!fs.exists(p))
       graft.core.AtomicFiles.writeAtomic(fs, p, threshold.toString)
   }
-
-  def checkThreshold(spark: SparkSession, wh: String,
-                             threshold: Double): Unit =
-    checkThresholdAt(spark, pairsPath(wh), "corpus/pairs", threshold)
-
-  def stampThreshold(spark: SparkSession, wh: String,
-                             threshold: Double): Unit =
-    stampThresholdAt(spark, pairsPath(wh), threshold)
 
   /** Single-long sibling-ledger read (the `Sinks.promote` format); -1 when
     * absent or unreadable (unreadable = re-do the guarded work, never
@@ -346,6 +339,68 @@ private[graft] object CorpusStore {
   def mediaCcPath(wh: String) = s"$wh/corpus/media_cc_labels"
 
   def linksPath(wh: String) = s"$wh/corpus/links"
+
+  /** A table's name inside the warehouse — the key the delete cascades
+    * report and audit it under. */
+  def tableName(path: String): String = path.substring(path.lastIndexOf('/') + 1)
+
+  /** One corpus modality's warehouse layout — what the shared drop,
+    * takedown, reinstate and survivors bodies in [[CorpusIngest]] need to
+    * know about it. Paths are functions of the warehouse root.
+    *
+    *   - `commit`: the ingest trim's existence key, written LAST by every
+    *     drop (its commit point);
+    *   - `bands`: the band store the params ledger guards and the
+    *     hot-bucket screen reads;
+    *   - `pairs`/`labels`: the cumulative pair table (threshold ledger,
+    *     keyed on `pairCols`) and its component label store;
+    *   - `keyed`: every id-keyed table a takedown purges;
+    *   - `derivedPairs`: further (pair table, label store) couples a
+    *     takedown purges (SemDeDup's, for embeddings);
+    *   - `rows`: the survivors view's row source;
+    *   - `link`: the modality's name in the `registerLinks` table.
+    */
+  final case class Modality(
+      idCol: String,
+      link: String,
+      commit: String => String,
+      bands: String => String,
+      pairs: String => String,
+      labels: String => String,
+      capped: String => String,
+      staged: String => String,
+      tombs: String => String,
+      pairCols: Seq[String],
+      cappedKeys: Seq[String],
+      keyed: Seq[String => String],
+      derivedPairs: Seq[(String => String, String => String)],
+      deleteOp: String,
+      reinstateOp: String,
+      rows: (SparkSession, String) => DataFrame)
+
+  val TextModality = Modality("doc_id", "doc", shinglePath, bandPath,
+    pairsPath, ccLabelsPath, cappedPath, stagedPath, tombPath,
+    Seq("doc_a", "doc_b"), Seq("band", "sig"),
+    Seq(docsPath, shinglePath, bandPath, statsPath, stagedPath), Nil,
+    "delete", "reinstate", (spark, wh) => readStore(spark, docsPath(wh)))
+
+  val EmbeddingModality = Modality("vec_id", "vec", embVecsPath,
+    embBandsPath, embPairsPath, embCcPath, embCappedPath, stagedEmbPath,
+    embTombPath, Seq("vec_a", "vec_b"), Seq("band", "code"),
+    Seq(embVecsPath, embBandsPath, semAsgPath, stagedEmbPath),
+    Seq((semPairsPath, semCcPath)), "delete_embeddings",
+    "reinstate_embeddings", (spark, wh) => readStore(spark, embVecsPath(wh)))
+
+  val MediaModality = Modality("media_id", "media", mediaHashPath,
+    mediaBandsPath, mediaPairsPath, mediaCcPath, mediaCappedPath,
+    stagedMediaPath, mediaTombPath, Seq("media_a", "media_b"),
+    Seq("ci", "chunk"), Seq(mediaHashPath, mediaBandsPath, stagedMediaPath),
+    Nil, "delete_media", "reinstate_media",
+    (spark, wh) => readStore(spark, mediaHashPath(wh))
+      .filter(col("phash").isNotNull && col("phash") =!= lit(-1L)))
+
+  val modalities: Seq[Modality] =
+    Seq(TextModality, EmbeddingModality, MediaModality)
 
   /** Generic scan of a root of `<prefix><stamp>` artifact dirs committed
     * by a lands-last `<marker>` file: (committed stamps ascending,

@@ -30,10 +30,10 @@ object Governance {
       s"registerLinks needs (content_key, modality, id), got " +
         links.columns.mkString(", "))
     val bad = links.select(col("modality")).distinct()
-      .filter(!col("modality").isin("doc", "vec", "media")).collect()
+      .filter(!col("modality").isin(modalities.map(_.link): _*)).collect()
     require(bad.isEmpty,
       s"registerLinks: unknown modalities ${bad.mkString(",")} — " +
-        "expected doc | vec | media")
+        s"expected ${modalities.map(_.link).mkString(" | ")}")
     Sinks.idempotentAppend(
       links.select(col("content_key").cast("long"), col("modality"),
         col("id").cast("long")),
@@ -67,21 +67,13 @@ object Governance {
       val resolved = spark.read.parquet(linksPath(warehouse))
         .join(keyDf, "content_key")
         .select(col("modality"), col("id")).distinct().collect()
-      def ids(m: String): Seq[Long] =
-        resolved.filter(_.getString(0) == m).map(_.getLong(1)).toSeq
-      val docAudit =
-        if (ids("doc").isEmpty) Map.empty[String, (Long, Long)]
-        else CorpusIngest.delete(spark, warehouse, ids("doc"))
-          .map { case (k, v) => s"doc.$k" -> v }
-      val vecAudit =
-        if (ids("vec").isEmpty) Map.empty[String, (Long, Long)]
-        else CorpusIngest.deleteEmbeddings(spark, warehouse, ids("vec"))
-          .map { case (k, v) => s"vec.$k" -> v }
-      val mediaAudit =
-        if (ids("media").isEmpty) Map.empty[String, (Long, Long)]
-        else CorpusIngest.deleteMedia(spark, warehouse, ids("media"))
-          .map { case (k, v) => s"media.$k" -> v }
-      val all = docAudit ++ vecAudit ++ mediaAudit +
+      val cascades = modalities.flatMap { m =>
+        val ids = resolved.filter(_.getString(0) == m.link).map(_.getLong(1))
+        if (ids.isEmpty) Nil
+        else CorpusIngest.deleteVia(spark, warehouse, m, ids.toSeq)
+          .map { case (k, v) => s"${m.link}.$k" -> v }
+      }
+      val all = cascades.toMap +
         ("links" -> Sinks.deleteByKey(spark, linksPath(warehouse), keyDf,
           Seq("content_key")))
       appendAudit(spark, warehouse, "forget", "content_key",

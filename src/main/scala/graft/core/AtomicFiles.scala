@@ -34,8 +34,7 @@ import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
   * `.crc` sidecar in a SECOND rename, so even an atomic data rename
   * leaves a window where a checksummed reader sees new data against the
   * old sum and throws. Writing raw means no sidecar ever exists; reads
-  * go raw too, which also shrugs off stale `.crc` residue that
-  * pre-atomic writers left behind (it is inert from here on).
+  * go raw too.
   *
   * Reads retry twice on an I/O error (a torn read on a filesystem whose
   * overwrite visibility is weaker than posix rename — transient by
@@ -55,21 +54,6 @@ private[graft] object AtomicFiles {
   /** Publish `content` at `p` atomically-visible (object doc): a reader
     * polling `p` across this call sees the old line or the new one,
     * never absence, emptiness, or a checksum mismatch.
-    *
-    * LEGACY-SIDECAR MIGRATION: a destination that a pre-atomic writer
-    * created THROUGH the checksummed fs carries a `.crc` sidecar. A raw
-    * rename over the data file would leave that sidecar permanently
-    * stale — inert to post-change readers (they read raw), but a
-    * PRE-change reader's checksummed open would throw ChecksumException
-    * on every read from then on. So a re-stamp that finds a sidecar
-    * deletes JUST THE SIDECAR (through the raw handle) before the
-    * rename — never the data file: a checksummed open with no sidecar
-    * falls back to an unverified read, so pre-change readers see old
-    * line → new line with no absence window and no mismatch instant,
-    * while deleting data+sidecar together would have re-opened exactly
-    * the torn-absence race this publish exists to close (the swap-token
-    * zombie test caught that variant of the fix). After the sweep no
-    * sidecar exists and the publish is the pure atomic rename.
     */
   def writeAtomic(fs: FileSystem, p: Path, content: String): Unit = {
     // self-enforcing residue contract: every target must belong to a
@@ -85,14 +69,6 @@ private[graft] object AtomicFiles {
         "to AtomicFiles.isControlTargetName so its crash residue stays " +
         "visible to the fsck census")
     val wfs = raw(fs)
-    fs match {
-      case c: org.apache.hadoop.fs.ChecksumFileSystem =>
-        val crc = c.getChecksumFile(p)
-        // sidecar probe on the raw handle; only a hit pays the delete
-        try { if (wfs.exists(crc)) wfs.delete(crc, false) }
-        catch { case _: Exception => () }
-      case _ => ()
-    }
     val bytes = content.getBytes("UTF-8")
     val tmp = new Path(p.getParent,
       p.getName + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))

@@ -61,11 +61,10 @@ object Sinks {
                     batchId: Long): java.sql.Timestamp = {
     val p = new org.apache.hadoop.fs.Path(s"$ledgerDir/batch-$batchId")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // EMPTY = a pre-atomic writer crashed between its create and its
-    // write; nothing used the stamp (it is read before the snapshot
-    // write), so restamping is safe — the old body NPE'd on it forever,
-    // bricking the batchId. Stamps publish atomically now, so the torn
-    // state can no longer be created.
+    // EMPTY = a torn stamp (the atomic publish renames without fsync,
+    // so power loss can leave a zero-length file); nothing used the
+    // stamp (it is read before the snapshot write), so restamping is
+    // safe — reading it as a timestamp would brick the batchId.
     AtomicFiles.readLine(fs, p).filter(_.trim.nonEmpty) match {
       case Some(line) => new java.sql.Timestamp(line.trim.toLong)
       case None =>
@@ -446,6 +445,18 @@ object Sinks {
     }
   }
 
+  /** Recursive count of parquet data files under a table path — the
+    * fragmentation signal maintenance callers gate compaction on.
+    */
+  def dataFileCount(spark: SparkSession, path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val it = fs.listFiles(p, true)
+    var n = 0L
+    while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
+    n
+  }
+
   /** Small-file COMPACTION — the maintenance pass every long-running ingest
     * needs: idempotentAppend lands one file set per batch, so a day of
     * minute triggers leaves ~1440 file sets per partition and scans start
@@ -465,20 +476,8 @@ object Sinks {
     * such tables resolve files through the manifest, not the listing.
     * Compact batch tables (idempotentAppend landings) only; for streaming
     * landings, `promote` into a batch table first and compact that.
-    */
-  /** Recursive count of parquet data files under a table path — the
-    * fragmentation signal maintenance callers gate compaction on.
-    */
-  def dataFileCount(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    var n = 0L
-    while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-    n
-  }
-
-  /** `clusterCols`: optional within-partition RANGE clustering for the
+    *
+    * `clusterCols`: optional within-partition RANGE clustering for the
     * rewrite — output tasks are range-partitioned and sorted on
     * (partitionCols ++ clusterCols) instead of hash-clustered on the
     * partition columns alone, so each rewritten file covers a contiguous
@@ -554,8 +553,8 @@ object Sinks {
     * nothing new. The ledger is advisory — losing it (it lives beside the
     * batch table, so `compact`'s directory swap preserves it) only costs a
     * rescan; `idempotentAppend`'s key anti-join still guards exactly-once.
-    */
-  /** `bucketSpec` (bucketKeys, numBuckets): when set, the batch table is a
+    *
+    * `bucketSpec` (bucketKeys, numBuckets): when set, the batch table is a
     * path-anchored BUCKETED store (bucketedIdempotentAppend) instead of a
     * plain parquet table — the right layout for a cumulative keyed target
     * whose every promotion anti-joins the full table (the table side of
@@ -707,6 +706,21 @@ object Sinks {
     }.toSet
   }
 
+  /** Restore a crash-parked table — see [[SwapProtocol.recoverSwap]]. */
+  def recoverSwap(spark: SparkSession, path: String): Boolean =
+    SwapProtocol.recoverSwap(spark, path)
+
+  /** Parked-swap census as (path, relative) — see
+    * [[SwapProtocol.parkedSwapTables]].
+    */
+  def parkedSwapTables(spark: SparkSession,
+                       root: String): Seq[(String, String)] =
+    SwapProtocol.parkedSwapTables(spark, root)
+
+  /** Parked-swap census — see [[SwapProtocol.parkedSwaps]]. */
+  def parkedSwaps(spark: SparkSession, root: String): Seq[String] =
+    SwapProtocol.parkedSwaps(spark, root)
+
   /** Rewrite-and-swap shared by compact and deleteByKey: write `df` (read
     * FROM the live table — staging to a sibling dir makes that safe) to
     * `._compact_tmp`, stage the live dir to `._compact_old`, rename the
@@ -725,28 +739,10 @@ object Sinks {
     * missing should call `recoverSwap` rather than treat the table as
     * dropped.
     */
-  /** Restore a crash-parked table — see [[SwapProtocol.recoverSwap]]. */
-  def recoverSwap(spark: SparkSession, path: String): Boolean =
-    SwapProtocol.recoverSwap(spark, path)
-
-  /** Parked-swap census as (path, relative) — see
-    * [[SwapProtocol.parkedSwapTables]].
-    */
-  def parkedSwapTables(spark: SparkSession,
-                       root: String): Seq[(String, String)] =
-    SwapProtocol.parkedSwapTables(spark, root)
-
-  /** Parked-swap census — see [[SwapProtocol.parkedSwaps]]. */
-  def parkedSwaps(spark: SparkSession, root: String): Seq[String] =
-    SwapProtocol.parkedSwaps(spark, root)
-
   private[core] def swapInto(spark: SparkSession, path: String, df: DataFrame,
                        partitionCols: Seq[String],
                        targetFiles: Option[Int],
                        clusterCols: Seq[String] = Nil): Unit = {
-    val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwap(spark, path)
     val reshaped = targetFiles match {
       case Some(n) if clusterCols.nonEmpty =>
         val ordering = (partitionCols ++ clusterCols).map(col)
@@ -755,24 +751,39 @@ object Sinks {
       case Some(n) => df.repartition(n, partitionCols.map(col): _*)
       case None => df
     }
+    swapVia(spark, path, "swapInto") { tmp =>
+      val writer = reshaped.write.mode(SaveMode.Overwrite)
+      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
+        .parquet(tmp.toString)
+    }
+  }
+
+  /** The swap steps both rewrite writers (`swapInto`, `bucketedSwapInto`)
+    * share: restore a crash-parked table, clear tmp/old residue,
+    * `writeTmp` the new table to `._compact_tmp`, stage the live dir out
+    * and swap tmp in (rolling back on failure), drop the old, and stamp
+    * the new rewrite generation.
+    */
+  private def swapVia(spark: SparkSession, path: String, what: String)(
+      writeTmp: org.apache.hadoop.fs.Path => Unit): Unit = {
+    val live = new org.apache.hadoop.fs.Path(path)
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    recoverSwap(spark, path)
     val tmp = new org.apache.hadoop.fs.Path(path + "._compact_tmp")
     val old = new org.apache.hadoop.fs.Path(path + "._compact_old")
     fs.delete(tmp, true); fs.delete(old, true)
-    val writer = reshaped.write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-      .parquet(tmp.toString)
-
+    writeTmp(tmp)
     // announce the rename window BEFORE opening it and keep the token
     // LIVE (re-stamped every TTL/3) until the swap-in lands: a lease-free
     // reader catching the live-absent instant resolves it against this
     // token instead of a timing probe, however long the renames take
     // (see SwapProtocol)
     SwapProtocol.withSwapToken(spark, fs, path) {
-      require(fs.rename(live, old), s"swapInto: could not stage out $path")
+      require(fs.rename(live, old), s"$what: could not stage out $path")
       if (!fs.rename(tmp, live)) {
         // roll the live table back before failing — never leave the path empty
         fs.rename(old, live)
-        throw new IllegalStateException(s"swapInto: swap failed for $path; rolled back")
+        throw new IllegalStateException(s"$what: swap failed for $path; rolled back")
       }
       fs.delete(old, true)
     }
@@ -856,15 +867,15 @@ object Sinks {
                                path: String): Option[(Seq[String], Int, String)] = {
     val p = bucketSpecLedger(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def corrupt =
+      s"bucketed store $path has a corrupt ._bucketspec ledger — " +
+        "restore it (without a ledger the store reads as an interrupted " +
+        "first create, which the next leased writer clears)"
     AtomicFiles.readLine(fs, p).map { line =>
-      require(line.contains("|"),
-        s"bucketed store $path has a corrupt ._bucketspec ledger — " +
-          "restore it (without a ledger the store reads as an interrupted " +
-          "first create, which the next leased writer clears)")
       // split at most 3 fields: the schema DDL may itself contain pipes
       val parts = line.trim.split("\\|", 3)
-      (parts(1).split(',').toSeq, parts(0).toInt,
-        if (parts.length >= 3) parts(2) else "")
+      require(parts.length == 3 && parts(2).nonEmpty, corrupt)
+      (parts(1).split(',').toSeq, parts(0).toInt, parts(2))
     }
   }
 
@@ -887,9 +898,9 @@ object Sinks {
   }
 
   /** Register (or re-register, in a fresh session) the external bucketed
-    * table for `path` and return its catalog name. The schema is read from
-    * the parquet footers; the bucket spec from the ledger — both belong to
-    * the store, so registration needs nothing session-held.
+    * table for `path` and return its catalog name. Schema and bucket spec
+    * both come from the ledger — they belong to the store, so registration
+    * needs nothing session-held.
     */
   private def ensureBucketedRegistered(spark: SparkSession, path: String): String = {
     val name = bucketedTableName(path)
@@ -898,14 +909,9 @@ object Sinks {
     if (spark.catalog.tableExists(name) && !pathExists(spark, path))
       spark.sql(s"DROP TABLE IF EXISTS `$name`")
     if (!spark.catalog.tableExists(name)) {
-      val (keys, buckets, ledgerDdl) = readBucketLedger(spark, path).getOrElse(
+      val (keys, buckets, schemaDdl) = readBucketLedger(spark, path).getOrElse(
         throw new IllegalArgumentException(
           s"$path is not a bucketed store (no ._bucketspec ledger)"))
-      // ledger schema first (works on a legitimately file-less store);
-      // footer inference only for a v1 ledger written before schemas rode it
-      val schemaDdl =
-        if (ledgerDdl.nonEmpty) ledgerDdl
-        else spark.read.parquet(path).schema.toDDL
       spark.sql(
         s"""CREATE TABLE `$name` ($schemaDdl) USING PARQUET
            |CLUSTERED BY (${keys.mkString(", ")})
@@ -1068,16 +1074,6 @@ object Sinks {
     refresh
   }
 
-  /** Idempotent keyed append into a path-anchored bucketed store — the
-    * bucketed twin of idempotentAppend. First call creates the store and
-    * stamps the spec ledger; later calls append under the LEDGER's spec
-    * (the physical layout is fixed at creation — a drifted `bucketKeys` /
-    * `buckets` argument is ignored in favor of the contract on disk).
-    * Each append is repartitioned to the bucket layout first: repartition's
-    * hash is the bucket hash, so every task holds exactly one bucket and an
-    * append lands at most one file per non-empty bucket instead of
-    * tasks × buckets small files.
-    */
   /** Sibling PARAMS ledger for a derived store: a single-line `k=v,...`
     * file stamped at store creation and required-EQUAL before every later
     * append — the geometry twin of the pair tables' threshold ledger. The
@@ -1099,14 +1095,13 @@ object Sinks {
     val p = new org.apache.hadoop.fs.Path(path + "._params")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     AtomicFiles.readLine(fs, p) match {
-      // an EMPTY ledger is a pre-atomic writer's torn stamp (crash
-      // between its create and its write), not a drifted geometry:
-      // stamp-first ordering means no append can have succeeded under
-      // it, so restamping with the caller's params is safe — and
-      // requiring equality against an empty line would brick the store
-      // forever with a message no parameter change could satisfy.
-      // Stamps publish atomically now, so the torn state can no longer
-      // be created.
+      // an EMPTY ledger is a torn stamp (the atomic publish renames
+      // without fsync, so power loss can leave a zero-length file), not
+      // a drifted geometry: stamp-first ordering means no append can
+      // have succeeded under it, so restamping with the caller's params
+      // is safe — and requiring equality against an empty line would
+      // brick the store forever with a message no parameter change
+      // could satisfy.
       case Some(stored) if stored.trim.nonEmpty =>
         require(stored.trim == line,
           s"$path was built under params [${stored.trim}]; " +
@@ -1130,6 +1125,16 @@ object Sinks {
     */
   private def coPartitionFlipLock(spark: SparkSession): Object = spark.conf
 
+  /** Idempotent keyed append into a path-anchored bucketed store — the
+    * bucketed twin of idempotentAppend. First call creates the store and
+    * stamps the spec ledger; later calls append under the LEDGER's spec
+    * (the physical layout is fixed at creation — a drifted `bucketKeys` /
+    * `buckets` argument is ignored in favor of the contract on disk).
+    * Each append is repartitioned to the bucket layout first: repartition's
+    * hash is the bucket hash, so every task holds exactly one bucket and an
+    * append lands at most one file per non-empty bucket instead of
+    * tasks × buckets small files.
+    */
   def bucketedIdempotentAppend(df: DataFrame, path: String, keys: Seq[String],
                                bucketKeys: Seq[String], buckets: Int): Unit = {
     val spark = df.sparkSession
@@ -1315,34 +1320,17 @@ object Sinks {
     val (keys, buckets) = bucketSpecOf(spark, path).getOrElse(
       throw new IllegalArgumentException(s"$path is not a bucketed store"))
     val name = ensureBucketedRegistered(spark, path)
-    val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recoverSwap(spark, path)
-    val tmp = new org.apache.hadoop.fs.Path(path + "._compact_tmp")
-    val old = new org.apache.hadoop.fs.Path(path + "._compact_old")
-    fs.delete(tmp, true); fs.delete(old, true)
     val tmpName = name + "_tmp"
-    spark.sql(s"DROP TABLE IF EXISTS `$tmpName`")
-    df.repartition(buckets, keys.map(col): _*)
-      .write.format("parquet")
-      .bucketBy(buckets, keys.head, keys.tail: _*)
-      .sortBy(keys.head, keys.tail: _*)
-      .option("path", tmp.toString)
-      .saveAsTable(tmpName)
-    spark.sql(s"DROP TABLE `$tmpName`")
-    // same token protocol as swapInto — one reader-visible contract for
-    // every rewrite swap in the warehouse
-    SwapProtocol.withSwapToken(spark, fs, path) {
-      require(fs.rename(live, old),
-        s"bucketedSwapInto: could not stage out $path")
-      if (!fs.rename(tmp, live)) {
-        fs.rename(old, live)
-        throw new IllegalStateException(
-          s"bucketedSwapInto: swap failed for $path; rolled back")
-      }
-      fs.delete(old, true)
+    swapVia(spark, path, "bucketedSwapInto") { tmp =>
+      spark.sql(s"DROP TABLE IF EXISTS `$tmpName`")
+      df.repartition(buckets, keys.map(col): _*)
+        .write.format("parquet")
+        .bucketBy(buckets, keys.head, keys.tail: _*)
+        .sortBy(keys.head, keys.tail: _*)
+        .option("path", tmp.toString)
+        .saveAsTable(tmpName)
+      spark.sql(s"DROP TABLE `$tmpName`")
     }
-    stampRewriteGen(spark, path)
     spark.catalog.refreshTable(name)
   }
 }

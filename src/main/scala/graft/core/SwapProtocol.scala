@@ -105,32 +105,14 @@ object SwapProtocol {
   private def swapTokenPath(path: String) =
     new org.apache.hadoop.fs.Path(path + "._swap_inflight")
 
-  // token content: `v2|<epochMillis>|<swapNonce>` — VERSION-PREFIXED so
-  // format evolution is mechanically detectable, not convention-gated.
-  // The nonce identifies WHICH swap's beat owns the token, so a beat
-  // that wedged and unblocked after a LATER swap stamped fresh refuses
-  // to clobber the newer swap's token with its pre-wedge millis (the
-  // ADVICE r16 false crash-park). Readers accept THREE generations:
-  //   - gen 1, bare `<millis>` (pre-nonce residue): nonce "" = unowned —
-  //     any beat may re-stamp;
-  //   - gen 2, `<millis>|<nonce>` (pre-version residue): distinguished
-  //     from a version prefix by the all-digits first field;
-  //   - gen 3 (current), `v2|<millis>|<nonce>`.
-  // An UNRECOGNIZED version prefix (a future writer's `v3|…`) parses
-  // maximally stale + unowned: ambiguity resolves toward the loud
-  // crash-park report (which only ever points at repair), never toward
-  // treating a parked store as absent.
-  //
-  // MIGRATION NOTE: readers at this version read every prior generation,
-  // so upgrading readers-before-writers needs no drain, and a fleet one
-  // writer generation behind its readers is also safe. The only unsafe
-  // shape is a reader TWO OR MORE writer generations old (a pre-nonce
-  // reader against these tokens: it parses `v2|…` as a
-  // NumberFormatException → maximally stale → reports every healthy
-  // in-flight swap as crash-parked for the whole rename window) — drain
-  // such readers before post-change writers swap. From gen 3 on, a
-  // format change bumps the prefix and old-but-v2-aware readers degrade
-  // the same bounded way (stale → "run repair"), never silently.
+  // token content: `v2|<epochMillis>|<swapNonce>`. The nonce identifies
+  // WHICH swap's beat owns the token, so a beat that wedged and unblocked
+  // after a LATER swap stamped fresh refuses to clobber the newer swap's
+  // token with its pre-wedge millis (a false crash-park). Anything else
+  // — another version prefix, torn bytes — parses maximally stale and
+  // unowned: ambiguity resolves toward the loud crash-park report (which
+  // only ever points at repair), never toward treating a parked store as
+  // absent.
   //
   // The stamp is an [[AtomicFiles.writeAtomic]] publish, never a direct
   // create(overwrite) on the live token: a posix fs rewrites a created
@@ -148,36 +130,22 @@ object SwapProtocol {
     AtomicFiles.writeAtomic(fs, swapTokenPath(path),
       s"v2|${System.currentTimeMillis()}|$nonce")
 
-  // clear via the CHECKSUMMED handle on purpose: it removes a legacy
-  // token's `.crc` sidecar along with the data file (tokens are written
-  // raw since the atomic-stamp fix, but residue from older writers may
-  // still carry one)
   private def clearSwapToken(fs: org.apache.hadoop.fs.FileSystem,
                              path: String): Unit =
     try fs.delete(swapTokenPath(path), false)
     catch { case _: java.io.IOException => () }
 
-  /** Parse one token line into (stamp, nonce) across all three on-disk
-    * generations (token-content doc above). Anything unrecognized — a
-    * future version prefix, torn bytes — reads as (0, ""): maximally
-    * stale and unowned, the fail-loud-at-repair direction.
+  /** Parse one `v2|<millis>|<nonce>` token line into (stamp, nonce).
+    * Anything else reads as (0, ""): maximally stale and unowned, the
+    * fail-loud-at-repair direction (token-content doc above).
     */
   private[graft] def parseSwapToken(raw: String): (Long, String) =
-    try {
-      val line = raw.trim
-      if (line.startsWith("v2|")) {
-        val rest = line.drop(3)
-        val i = rest.indexOf('|')
-        if (i < 0) (0L, "")
-        else (rest.substring(0, i).toLong, rest.substring(i + 1))
-      } else {
-        val i = line.indexOf('|')
-        if (i < 0) (line.toLong, "") // gen 1: legacy bare-millis token
-        else if (line.take(i).nonEmpty && line.take(i).forall(_.isDigit))
-          (line.take(i).toLong, line.substring(i + 1)) // gen 2
-        else (0L, "") // unrecognized version prefix (a future writer)
-      }
-    } catch { case _: Exception => (0L, "") }
+    raw.trim.split("\\|", 3) match {
+      case Array("v2", millis, nonce) =>
+        try (millis.toLong, nonce)
+        catch { case _: NumberFormatException => (0L, "") }
+      case _ => (0L, "")
+    }
 
   /** (stamp, nonce), None when absent — an [[AtomicFiles.readLine]] (raw,
     * bounded-retried). A token that persistently cannot be read or parsed
@@ -276,11 +244,6 @@ object SwapProtocol {
     // instead of leaving it stale.
     val nonce = java.util.UUID.randomUUID().toString.take(12)
     val key = fs.makeQualified(new org.apache.hadoop.fs.Path(path)).toString
-    // under the warehouse lease no other writer's swap can be in flight,
-    // so clearing first is safe — and it removes a PRE-ATOMIC-FIX
-    // writer's `.crc` sidecar residue, which the raw stamp below would
-    // otherwise leave stale next to the token forever
-    clearSwapToken(fs, path)
     stampSwapToken(fs, path, nonce)
     // register AFTER the entry stamp: a stamp failure aborts the swap
     // right here (before the try/finally exists to clean up), and a
@@ -312,7 +275,7 @@ object SwapProtocol {
         // fresh foreign stamp on the token (the cross-JVM back-off):
         // while both hold, whatever sits at the token path — our own
         // stamp, a dead zombie's STALE late-landing clobber (reclaimed
-        // here within one period), legacy residue, or a racing absence —
+        // here within one period), or a racing absence —
         // is ours to re-stamp; once deregistered, this beat is itself
         // the zombie and must touch nothing (a newer swap may own the
         // token, or nobody does and stamping would resurrect it).

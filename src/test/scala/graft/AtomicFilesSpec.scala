@@ -129,41 +129,6 @@ class AtomicFilesSpec extends AnyFunSuite {
     assert(CorpusStore.readLongLedger(spark, ledger) == 42L)
   }
 
-  test("re-stamping a legacy checksummed ledger removes its .crc sidecar — a pre-change reader's checksummed open stays healthy") {
-    val dir = Files.createTempDirectory("ledger-crc").toString
-    val ledger = s"$dir/._watermark"
-    val p = new org.apache.hadoop.fs.Path(ledger)
-    val crc = new org.apache.hadoop.fs.Path(s"$dir/.._watermark.crc")
-    // legacy write through the CHECKSUMMED fs: data + .crc sidecar
-    val cfs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = cfs.create(p, true)
-    try out.write("7".getBytes("UTF-8")) finally out.close()
-    assert(cfs.exists(crc), "fixture did not produce a checksum sidecar")
-    // the atomic re-stamp goes RAW; a raw rename alone would leave the
-    // sidecar permanently stale — poisoning every CHECKSUMMED open a
-    // pre-change reader makes from then on (ADVICE r17) — so a re-stamp
-    // that finds a sidecar deletes JUST the sidecar first (never the
-    // data file: that would re-open the torn-absence window for raw
-    // readers; a checksummed open with no sidecar reads unverified)
-    CorpusStore.writeLongLedger(spark, ledger, 8L)
-    assert(!cfs.exists(crc),
-      "first atomic re-stamp must remove the legacy .crc sidecar")
-    assert(CorpusStore.readLongLedger(spark, ledger) == 8L)
-    // a PRE-change (checksummed) reader of the re-stamped ledger: no
-    // ChecksumException, correct content
-    val in = cfs.open(p)
-    val legacyRead =
-      try new java.io.BufferedReader(new java.io.InputStreamReader(in))
-        .readLine()
-      finally in.close()
-    assert(legacyRead == "8",
-      s"checksummed read after re-stamp returned $legacyRead")
-    // subsequent re-stamps are the pure atomic rename — no sidecar ever
-    // reappears
-    CorpusStore.writeLongLedger(spark, ledger, 9L)
-    assert(!cfs.exists(crc) && CorpusStore.readLongLedger(spark, ledger) == 9L)
-  }
-
   test("scheme-ladder rung 3: no FileContext binding -> direct single-PUT overwrite, no temp residue") {
     // a scheme whose FileSystem exists but has no AbstractFileSystem
     // binding (some object stores): writeAtomic's rename returns false,

@@ -365,6 +365,30 @@ class CorpusIngestSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$wh/corpus/documents")
       .filter(col("doc_id") === 20L).count() == 1,
       "reinstated doc must re-land via the stream path")
+
+    // the embedding and media modalities run the same lift: the takedown
+    // tombstones its ids unconditionally (no store of theirs exists here),
+    // and the reinstate lifts exactly the tombstoned ones, audited under
+    // the modality's own op names
+    for ((del, rein, tombs, op) <- Seq[(Seq[Long] => Any, Seq[Long] => Long, String, String)](
+        (CorpusIngest.deleteEmbeddings(spark, wh, _),
+          CorpusIngest.reinstateEmbeddings(spark, wh, _), "emb_tombstones",
+          "embeddings"),
+        (CorpusIngest.deleteMedia(spark, wh, _),
+          CorpusIngest.reinstateMedia(spark, wh, _), "media_tombstones",
+          "media"))) {
+      assert(rein(Seq(7L)) == 0L, s"$op: no tombstone table yet")
+      del(Seq(7L, 8L))
+      assert(rein(Seq(7L, 999L)) == 1L, s"$op: lifts only the tombstoned id")
+      assert(rein(Seq(7L)) == 0L, s"$op: idempotent")
+      assert(spark.read.parquet(s"$wh/corpus/$tombs").as[Long].collect()
+        .toSeq == Seq(8L), s"$op: the other tombstone stays")
+      val audit = CorpusIngest.governanceAudit(spark, wh)
+        .select("op", "table", "rows_before", "rows_after")
+        .as[(String, String, Long, Long)].collect().toSeq
+      assert(audit.contains((s"delete_$op", tombs, 0L, 2L)), s"$audit")
+      assert(audit.contains((s"reinstate_$op", tombs, 2L, 1L)), s"$audit")
+    }
   }
 
   test("takedown issued before the FIRST promotion still tombstones; early promote no-ops") {
@@ -1282,11 +1306,13 @@ class CorpusIngestSpec extends AnyFunSuite {
     val seqs = audit.select("seq").distinct().as[Long].collect().sorted.toSeq
     assert(seqs == (0L until 18L), s"seq must be contiguous from 0: $seqs")
     // the seq ledger replaced the full-log scan and must track the log.
-    // Tampering goes through the Hadoop FS (writeLongLedger's medium) —
-    // a raw java.nio write would orphan the .crc sidecar and fail reads
+    // Tampering writes RAW, the way the engine writes its ledgers: a
+    // checksummed write would leave a .crc sidecar that the engine's raw
+    // re-stamp then leaves stale, failing the checksummed reads below
     val ledgerP = new org.apache.hadoop.fs.Path(
       s"$wh/corpus/audit_log._audit_seq")
-    val fsH = ledgerP.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fsH = graft.core.AtomicFiles.raw(
+      ledgerP.getFileSystem(spark.sparkContext.hadoopConfiguration))
     def readLedger(): String = {
       val in = fsH.open(ledgerP)
       try new java.io.BufferedReader(

@@ -145,7 +145,7 @@ class SinksSpec extends AnyFunSuite {
     def unpark(): Unit = assert(fs.rename(old, hp))
     def stamp(atMs: Long): Unit = {
       val out = fs.create(token, true)
-      try out.write(atMs.toString.getBytes("UTF-8")) finally out.close()
+      try out.write(s"v2|$atMs|nn-test".getBytes("UTF-8")) finally out.close()
     }
     // PAUSED WRITER: parked signature + fresh token = a healthy swap is
     // between its two renames (a GC pause, a slow object-store rename).
@@ -239,7 +239,7 @@ class SinksSpec extends AnyFunSuite {
       assert(fs.rename(hp, old))
       val out = fs.create(token, true)
       // stamp it already-stale (2 TTLs old) — no sleep on the test path
-      try out.write((System.currentTimeMillis() - 6000L).toString
+      try out.write(s"v2|${System.currentTimeMillis() - 6000L}|nn-killed"
         .getBytes("UTF-8"))
       finally out.close()
       val crashed = intercept[IllegalStateException](Sinks.storePresent(spark, p))
@@ -409,7 +409,7 @@ class SinksSpec extends AnyFunSuite {
       // zombie garbage lands: foreign nonce, distinctively stale stamp
       val garbageStamp = System.currentTimeMillis() - 7777777L
       val out = fs.create(token, true)
-      try out.write(s"$garbageStamp|zz-zombie".getBytes("UTF-8"))
+      try out.write(s"v2|$garbageStamp|zz-zombie".getBytes("UTF-8"))
       finally out.close()
       // within a couple of beat periods the LIVE swap reclaims its path:
       // fresh millis, its own nonce — never the zombie's stale stamp
@@ -518,7 +518,7 @@ class SinksSpec extends AnyFunSuite {
     val token = new org.apache.hadoop.fs.Path(p + "._swap_inflight")
     assert(fs.rename(hp, old)) // parked signature
     val out = fs.create(token, true)
-    try out.write(s"${System.currentTimeMillis() - 3000L}|wr-nonce"
+    try out.write(s"v2|${System.currentTimeMillis() - 3000L}|wr-nonce"
       .getBytes("UTF-8"))
     finally out.close()
     spark.conf.set(Sinks.SwapInflightTtlKey, "1200")
@@ -1612,7 +1612,7 @@ class SinksSpec extends AnyFunSuite {
       s"got $parked")
   }
 
-  test("swap-token format: readers accept all three on-disk generations; an unknown version reads maximally stale") {
+  test("swap-token format: only v2|millis|nonce parses; older formats and unknown versions read maximally stale") {
     import graft.core.SwapProtocol
     val base = Files.createTempDirectory("swap-fmt").toString
     val p = s"$base/store"
@@ -1632,28 +1632,25 @@ class SinksSpec extends AnyFunSuite {
     try {
       val now = System.currentTimeMillis()
       val stale = now - 10L * 60L * 1000L
-      // gen 1 (bare millis), gen 2 (millis|nonce), gen 3 (v2|millis|
-      // nonce): a fresh stamp reads in-flight and a stale one reads
-      // crash-parked — IDENTICALLY across generations, so a fleet one
-      // writer generation behind its readers needs no drain
-      for (fmt <- Seq[Long => String](
-        m => s"$m", m => s"$m|nn-gen2", m => s"v2|$m|nn-gen3")) {
-        plant(fmt(now))
-        assert(verdict().contains("mid-swap"),
-          s"fresh ${fmt(now)} must read in-flight")
-        plant(fmt(stale))
-        assert(verdict().contains("crash-parked"),
-          s"stale ${fmt(stale)} must read crash-parked")
-      }
-      // a FUTURE writer's unknown version prefix: maximally stale even
-      // with fresh millis — resolves to the loud repair report, never
-      // "absent", never a silently wrong in-flight verdict
-      plant(s"v3|$now|nn-future")
+      // the current format: a fresh stamp reads in-flight and a stale one
+      // reads crash-parked
+      plant(s"v2|$now|nn-v2")
+      assert(verdict().contains("mid-swap"), "a fresh v2 token must read in-flight")
+      plant(s"v2|$stale|nn-v2")
       assert(verdict().contains("crash-parked"),
-        "an unknown version prefix must read maximally stale")
-      // the parse itself, pinned per generation
-      assert(SwapProtocol.parseSwapToken("12345") == ((12345L, "")))
-      assert(SwapProtocol.parseSwapToken("12345|abc") == ((12345L, "abc")))
+        "a stale v2 token must read crash-parked")
+      // any other format — an unknown version prefix, or the bare-millis
+      // and millis|nonce shapes older writers used — is maximally stale
+      // even with fresh millis: it resolves to the loud repair report,
+      // never "absent", never a silently wrong in-flight verdict
+      for (line <- Seq(s"v3|$now|nn-future", s"$now", s"$now|nn-old")) {
+        plant(line)
+        assert(verdict().contains("crash-parked"),
+          s"$line must read maximally stale")
+      }
+      // the parse itself
+      assert(SwapProtocol.parseSwapToken("12345") == ((0L, "")))
+      assert(SwapProtocol.parseSwapToken("12345|abc") == ((0L, "")))
       assert(SwapProtocol.parseSwapToken("v2|12345|abc") == ((12345L, "abc")))
       assert(SwapProtocol.parseSwapToken("v3|12345|abc") == ((0L, "")))
       assert(SwapProtocol.parseSwapToken("garbage") == ((0L, "")))

@@ -25,9 +25,8 @@ import org.apache.spark.sql.SparkSession
   * the lease-free [[graft.core.Sinks.storePresent]] gate ONCE and log
   * the verdict (`verdict-present` / `verdict-absent` /
   * `verdict-inflight` / `verdict-parked`) — the cross-process half of
-  * the token FORMAT-GENERATION contract: a reader process with its own
-  * clock resolving token residue some other-generation writer process
-  * left behind.
+  * the token format contract: a reader process with its own clock
+  * resolving token residue another writer process left behind.
   */
 object SwapRaceMain {
 
