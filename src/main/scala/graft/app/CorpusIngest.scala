@@ -498,9 +498,8 @@ object CorpusIngest {
       // silently recompute the increment as EMPTY after the store append),
       // so cut lineage entirely with an eager checkpoint (reliable when
       // spark.graft.checkpointDir is configured); the increment is
-      // drop-bounded
-      val inc = graft.core.Checkpoints.cut(d.dedup(trimmed))
-      val nNew = inc.count()
+      // drop-bounded, and its row count comes from the cut's own job
+      val (inc, nNew) = graft.core.Checkpoints.cutCounted(d.dedup(trimmed))
       if (nNew == 0) (0L, 0L)
       else {
         val prepared = d.prepare(inc)
@@ -532,9 +531,9 @@ object CorpusIngest {
         stampThresholdAt(spark, m.pairs(wh), d.cutoff)
         appendKeyedStore(spark, pairs, m.pairs(wh), buckets,
           keys = m.pairCols)
-        // fold the drop's pairs into the label store — work bounded by
-        // touched components, so survivors never re-runs the full-graph
-        // contraction
+        // fold the drop's pairs into the label store — a driver-side
+        // merge over the pairs' endpoints and one broadcast relabel, so
+        // survivors never re-runs the full-graph contraction
         if (nPairs > 0)
           updateLabels(spark, m.labels(wh), m.pairs(wh), pairs,
             m.pairCols(0), m.pairCols(1), buckets)

@@ -106,21 +106,25 @@ private[graft] object CorpusStore {
   // components over the FULL cumulative pair table on every read — an
   // iterative multi-shuffle job whose cost grows with the pair graph
   // forever. Each ingest now folds its drop's new pairs into a persisted
-  // VERSIONED label table instead (Components.mergeLabels: work bounded
-  // by the touched components + increment, never the cumulative graph),
+  // VERSIONED label table instead (Components.mergeLabels: the driver
+  // holds at most 2·nPairs ids — the new pairs' endpoints and their
+  // current components — and the relabel is one broadcast join over the
+  // label view; no contraction round, nothing read of the pair table),
   // and the survivor views read the label store's current view — one
   // co-located argmax scan. The store is append-only (node, component,
-  // seq) bucketed on node: per-drop writes are touched-rows-sized, the
-  // current view is a zero-exchange groupBy on the bucket key, and
-  // maintenance folds old versions away with an atomic bucket-preserving
-  // rewrite once they dominate. Governance deletes can SPLIT components
-  // (pair rows removed), which incremental merge cannot express — the
-  // cascades drop the affected label store and EAGERLY rebuild it from
-  // the purged pair table (rebuildLabels), so the one full contraction a
-  // split costs is paid once inside the rare takedown call, never per
-  // survivors read. Crash-retry safe: the merge is deterministic from
-  // (current view, re-derived identical pairs), so a replay appends
-  // identical values under a fresh seq — the argmax view is unchanged.
+  // seq) bucketed on node, where `seq` versions its node: a relabelled
+  // node's new row carries its latest seq + 1 and a new node starts at 0.
+  // Per-drop writes are moved-rows-sized, a drop that moves no node
+  // writes nothing, the current view is a zero-exchange groupBy on the
+  // bucket key, and maintenance folds old versions away with an atomic
+  // bucket-preserving rewrite once they dominate. Governance deletes can
+  // SPLIT components (pair rows removed), which incremental merge cannot
+  // express — the cascades drop the affected label store and EAGERLY
+  // rebuild it from the purged pair table (rebuildLabels), so the one full
+  // contraction a split costs is paid once inside the rare takedown call,
+  // never per survivors read. Crash-retry safe: the merge is deterministic
+  // from (current view, re-derived identical pairs), so a replay finds
+  // every node already labelled and appends nothing.
   // Store presence is judged by the SPEC LEDGER, not the directory:
   // bucketedIdempotentAppend stamps the ledger only after the initial
   // write commits, so a torn create (crash mid-first-write) reads as
@@ -142,31 +146,28 @@ private[graft] object CorpusStore {
                            aCol: String, bCol: String,
                            buckets: Int): Unit = {
     healTornCreate(spark, labelPath)
-    val exists = Sinks.isBucketedStore(spark, labelPath)
-    val changed =
-      if (!exists)
-        Components.connectedComponents(
-          readStore(spark, pairsP).select(col(aCol), col(bCol)))
-      else Components.mergeLabels(
-        labelView(readStore(spark, labelPath)),
-        newPairs.select(col(aCol), col(bCol)))
-    val seq =
-      if (!exists) 0L
-      else {
-        // a store can legitimately exist EMPTY (created by a pair-less
-        // rebuild); max over zero rows is null, and the next version is 0
-        val r = readStore(spark, labelPath).agg(max(col("seq"))).head()
-        (if (r.isNullAt(0)) -1L else r.getLong(0)) + 1L
-      }
-    Sinks.bucketedIdempotentAppend(changed.withColumn("seq", lit(seq)),
-      labelPath, keys = Seq("node", "seq"), bucketKeys = Seq("node"),
-      buckets = buckets)
-    // maintenance: fold accumulated versions into the current view once
-    // appends have fragmented the store — one atomic swap that is both
-    // the compaction and the version GC
-    if (Sinks.dataFileCount(spark, labelPath) > 4L * buckets)
-      Sinks.rewriteBucketed(spark, labelPath,
-        labelView(readStore(spark, labelPath)).withColumn("seq", lit(0L)))
+    if (!Sinks.isBucketedStore(spark, labelPath))
+      appendLabels(Components.connectedComponents(
+        readStore(spark, pairsP).select(col(aCol), col(bCol)))
+        .withColumn("seq", lit(0L)), labelPath, buckets)
+    else {
+      // the view carries each node's latest seq, so the next version is
+      // computed in the relabel query itself — no store-wide max job
+      val view = readStore(spark, labelPath).groupBy(col("node"))
+        .agg(max_by(col("component"), col("seq")).as("component"),
+          max(col("seq")).as("seq"))
+      Components.mergeLabels(view, newPairs.select(col(aCol), col(bCol)))
+        .foreach { changed =>
+          appendLabels(changed.withColumn("seq",
+            coalesce(col("seq") + 1L, lit(0L))), labelPath, buckets)
+          // maintenance: fold accumulated versions into the current view
+          // once appends have fragmented the store — one atomic swap that
+          // is both the compaction and the version GC
+          if (Sinks.dataFileCount(spark, labelPath) > 4L * buckets)
+            Sinks.rewriteBucketed(spark, labelPath,
+              labelView(readStore(spark, labelPath)).withColumn("seq", lit(0L)))
+        }
+    }
   }
 
   /** Eagerly rebuild a component label store from its (just-purged) pair
@@ -190,13 +191,18 @@ private[graft] object CorpusStore {
     dropStore(spark, labelPath)
     if (keyedStorePresent(spark, pairsP)) {
       val (_, buckets) = Sinks.bucketSpecOf(spark, pairsP).get
-      val labels = Components.connectedComponents(
+      appendLabels(Components.connectedComponents(
         readStore(spark, pairsP).select(col(aCol), col(bCol)))
-      Sinks.bucketedIdempotentAppend(labels.withColumn("seq", lit(0L)),
-        labelPath, keys = Seq("node", "seq"), bucketKeys = Seq("node"),
-        buckets = buckets)
+        .withColumn("seq", lit(0L)), labelPath, buckets)
     }
   }
+
+  /** Append (node, component, seq) rows to a label store, keyed on
+    * (node, seq) and bucketed on node. */
+  private def appendLabels(rows: DataFrame, labelPath: String,
+                           buckets: Int): Unit =
+    Sinks.bucketedIdempotentAppend(rows, labelPath,
+      keys = Seq("node", "seq"), bucketKeys = Seq("node"), buckets = buckets)
 
   /** Label-store / pair-table DRIFT: (pair ids the label merge never
     * covered, label nodes with no pair evidence). One definition shared

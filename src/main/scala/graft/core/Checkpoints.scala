@@ -67,8 +67,21 @@ object Checkpoints {
     * Durable when the session configures `DirKey`; executor-local
     * otherwise.
     */
-  def cut(df: DataFrame): DataFrame = {
+  def cut(df: DataFrame): DataFrame = cutCounted(df)._1
+
+  /** `cut`, also returning the cut frame's row count. The count comes
+    * from the job that materializes the cut — the same single pass either
+    * branch runs anyway — so a caller that needs both pays no second
+    * action over the cut frame.
+    */
+  def cutCounted(df: DataFrame): (DataFrame, Long) = {
     val spark = df.sparkSession
+    // marking is lazy in both branches; counting the marked frame's rows
+    // is the materializing job, and the checkpoint completes when it
+    // ends (a local cut keeps the blocks that job cached; a reliable one
+    // then writes its files from them)
+    def materialize(marked: DataFrame) =
+      (marked, marked.queryExecution.toRdd.count())
     configured(spark) match {
       case Some(dir) =>
         val sc = spark.sparkContext
@@ -111,15 +124,14 @@ object Checkpoints {
           // checkpoint files write at the end of this first job, reading
           // the blocks the job just cached), without holding the lock
           // across the job
-          marked.count()
-          marked
+          materialize(marked)
         } finally {
-          // the checkpoint files are on disk once count() returns (the
+          // the checkpoint files are on disk once the count returns (the
           // write job runs inside the same action) — the cache was
           // scaffolding for the write, not state the cut depends on
           if (ourPersist) df.unpersist(blocking = false)
         }
-      case None => df.localCheckpoint()
+      case None => materialize(df.localCheckpoint(eager = false))
     }
   }
 

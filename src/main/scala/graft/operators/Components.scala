@@ -97,43 +97,85 @@ object Components {
 
   /** INCREMENTAL component maintenance: fold a drop's new edges into an
     * existing (node, component) labeling WITHOUT re-running the
-    * contraction over the full graph. The observation: new edges can only
-    * change components they TOUCH — every other component keeps its label
-    * set verbatim. So the work is (1) find the components the new edges'
-    * endpoints belong to, (2) re-run the star contraction over just the
-    * NEW edges plus the star edges (node, component) of those touched
-    * components' members — star edges are an equivalent connectivity
-    * witness for the old labeling, so the sub-result equals the full
-    * recompute restricted to the touched region — and (3) return the
-    * re-labeled rows (touched members ∪ new endpoints) for the caller to
-    * version-append over the old rows.
+    * contraction. New edges can only change components they TOUCH, and a
+    * touched component moves as a whole (its members keep sharing one
+    * label), so the merge is solved on the COMPONENT-CONTRACTED increment:
+    * one vertex per touched old component or new node, one edge per new
+    * edge.
+    *   1. Collect the new edges to the driver (the caller's pair
+    *      increment, bounded by the drop).
+    *   2. Look up each endpoint's current component: one broadcast
+    *      left-semi join of the label view with the endpoint set, at most
+    *      2·nEdges rows.
+    *   3. Union-find on the driver over those component ids plus the new
+    *      node ids. A merged set's label is its minimum id — the minimum
+    *      member of the merged component, since a component id is its own
+    *      minimum member.
+    *   4. The changed rows: the members of every component whose label
+    *      moves (label view ⋈ broadcast(remap) on component) plus the new
+    *      nodes.
     *
-    * Cost: bounded by the new edges plus the touched components' member
-    * counts — never the cumulative pair graph. This is what turns the
-    * survivors view from a per-read full-graph CC job into a label-store
-    * scan at 100 TB (CorpusIngest maintains the store per drop).
+    * Cost: the driver holds at most 2·nEdges ids, and the relabel is one
+    * broadcast join over the label view — no contraction round, and
+    * nothing read of the cumulative pair graph.
     *
-    * `currentLabels`: (node, component) — the CURRENT view of the label
-    * store (one row per node). `newEdges`: two numeric columns. Returns
-    * (node, component) for exactly the rows whose label may have changed.
-    * Deterministic (min-id labels), so a crash-retry replaying the same
-    * merge appends identical values — version-append semantics make that
-    * harmless.
+    * `currentLabels`: (node, component, ...) — the CURRENT view of the
+    * label store, one row per node; further columns (the store's `seq`)
+    * ride along on relabelled rows and read null on new nodes.
+    * `newEdges`: two numeric columns; null endpoints and self-loops are
+    * ignored. Returns the changed rows with `currentLabels`' columns, or
+    * None when no node moves (every new edge lies inside one existing
+    * component, as on a replayed drop). Deterministic (min-id labels), so
+    * a crash-retry replaying the same merge finds nothing left to move.
     */
-  def mergeLabels(currentLabels: DataFrame, newEdges: DataFrame): DataFrame = {
+  def mergeLabels(currentLabels: DataFrame,
+                  newEdges: DataFrame): Option[DataFrame] = {
+    val spark = newEdges.sparkSession
+    import spark.implicits._
     val Seq(cu, cv) = newEdges.columns.toSeq.take(2).map(col)
-    val e = newEdges.select(cu.cast("long").as("u"), cv.cast("long").as("v"))
-    val touched = e.select(col("u").as("node"))
-      .union(e.select(col("v").as("node"))).distinct()
-    val labels = currentLabels.select(col("node").cast("long").as("node"),
-      col("component").cast("long").as("component"))
-    val touchedComps = labels.join(touched, Seq("node"), "left_semi")
-      .select(col("component")).distinct()
-    // all members of the touched components, as star edges — an exact
-    // connectivity witness of the old labeling on that region
-    val memberStars = labels.join(touchedComps, Seq("component"), "left_semi")
-      .select(col("node").as("u"), col("component").as("v"))
-    connectedComponents(e.select(col("u"), col("v")).unionByName(memberStars))
+    val edges = newEdges.select(cu.cast("long").as("u"), cv.cast("long").as("v"))
+      .filter(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
+      .as[(Long, Long)].collect()
+    val labels = currentLabels
+      .withColumn("node", col("node").cast("long"))
+      .withColumn("component", col("component").cast("long"))
+    val endpoints = edges.flatMap { case (u, v) => Seq(u, v) }.distinct
+    val compOf =
+      if (endpoints.isEmpty) Map.empty[Long, Long]
+      else labels
+        .join(broadcast(endpoints.toSeq.toDF("node")), Seq("node"), "left_semi")
+        .select(col("node"), col("component")).as[(Long, Long)].collect().toMap
+
+    // union-find whose root is always the set minimum; an old endpoint
+    // stands for its whole component, a new one for itself
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    def key(n: Long) = compOf.getOrElse(n, n)
+    edges.foreach { case (u, v) =>
+      val (a, b) = (find(key(u)), find(key(v)))
+      if (a != b) parent(math.max(a, b)) = math.min(a, b)
+    }
+    val remap = compOf.values.toSeq.distinct
+      .map(c => (c, find(c))).filter { case (c, l) => c != l }
+    val fresh = endpoints.filterNot(compOf.contains).map(n => (n, find(n)))
+
+    val extras = labels.schema.fields.filterNot(f =>
+      f.name == "node" || f.name == "component")
+    val relabelled = Option.when(remap.nonEmpty)(labels
+      .join(broadcast(remap.toDF("component", "_label")), Seq("component"))
+      .select(col("node") +: col("_label").as("component") +:
+        extras.map(f => col(f.name)).toSeq: _*))
+    val added = Option.when(fresh.nonEmpty)(fresh.toSeq
+      .toDF("node", "component")
+      .select(col("node") +: col("component") +:
+        extras.map(f => lit(null).cast(f.dataType).as(f.name)).toSeq: _*))
+    (relabelled ++ added).reduceOption(_ unionByName _)
   }
 
   /** Large-star: every node re-points its strictly-LARGER neighbors at the

@@ -317,6 +317,7 @@ object DedupOps {
       val oldSh = shingleTable(docs.filter(col("doc_id") % 7 =!= 0))
       minhashLshIncremental(minhashBandTable(oldSh), oldSh,
         docs.filter(col("doc_id") % 7 === 0), threshold = 0.5)
+        .orderBy(col("doc_a"), col("doc_b"))
     },
 
     // CAPPED incremental dedup — the production skew guard as a declared,
@@ -375,6 +376,7 @@ object DedupOps {
       minhashLshIncremental(storedBands, oldSh,
         docs.filter(col("doc_id") % 7 === 0), threshold = 0.5,
         excludeBuckets = Some(overflowingBuckets(storedBands, cap = 1)))
+        .orderBy(col("doc_a"), col("doc_b"))
     },
 
     // SALTED incremental dedup — the skew guard's recall-preserving form:
@@ -404,6 +406,7 @@ object DedupOps {
         docs.filter(col("doc_id") % 7 === 0), threshold = 0.5,
         excludeBuckets = Some(overflowingBuckets(storedBands, cap = 1)),
         saltHotBuckets = 4)
+        .orderBy(col("doc_a"), col("doc_b"))
     },
 
     // CONTAINMENT near-dup: asymmetric overlap |A∩B|/|A| (and /|B|) over
@@ -599,6 +602,7 @@ object DedupOps {
         SimilarityOps.embBandTable(old),
         SimilarityOps.embVecTable(old),
         emb.filter(isNew), threshold = 0.42)
+        .orderBy(col("vec_a"), col("vec_b"))
     },
 
     // Embedding dedup APPLIED — the semantic modality's `dedup_survivors`:
@@ -1029,7 +1033,10 @@ object DedupOps {
     * The isNotNull filter restores inner-join semantics for docs with no
     * shingle row (sub-3-word docs never reach candidates anyway — they have
     * no bands either). Arithmetic is identical to verifyPairs, so the two
-    * verify paths can never drift.
+    * verify paths can never drift. The pairs come back UNORDERED: a global
+    * sort would cost a range-sampling job and an exchange, and the ingest
+    * consumers (keyed bucketed append, label merge) re-partition or
+    * collect them anyway; a declared query sorts for itself.
     */
   private def verifyPairsSplit(cand: DataFrame, storedSh: DataFrame,
                                freshSh: DataFrame, threshold: Double): DataFrame = {
@@ -1053,7 +1060,6 @@ object DedupOps {
         size(col("sh_a")).cast("long"), size(col("sh_b")).cast("long")))
       .filter(col("jac") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jac"))
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** Near-dup clusters: MinHash+LSH verified pairs → connected components →

@@ -451,6 +451,7 @@ object SimilarityOps {
         kmeansCentroids(old, k = 8, iters = 3))
       semDedupPairsIncremental(cents, semAssignTable(old, cents),
         emb.filter(isNew), threshold = 0.42)
+        .orderBy(col("vec_a"), col("vec_b"))
     }
   )
 
@@ -701,7 +702,8 @@ object SimilarityOps {
     * (pair-bounded, far below candidate volume) against the commit ids —
     * the vec store streams off its vec_id buckets exchange-free; the
     * cid-bucketed assignment scan is never re-keyed. Pass None only when
-    * no commit table exists yet.
+    * no commit table exists yet. The pairs come back unordered, like the
+    * text twin's (DedupOps.verifyPairsSplit).
     */
   def semPairsIncrementalFromAssign(storedAsg: DataFrame,
                                     freshAsg: DataFrame,
@@ -743,7 +745,6 @@ object SimilarityOps {
     // did not — the retry's increment then OVERLAPS the stored
     // assignments, and a new-new pair would also surface as new-old
     newOld.unionByName(newNew).dropDuplicates("vec_a", "vec_b")
-      .orderBy(col("vec_a"), col("vec_b"))
   }
 
   /** All pairs with cosine >= threshold (embedding near-dup). One side is
@@ -965,7 +966,8 @@ object SimilarityOps {
     * salted split — the hot buckets' candidates derive through
     * `Salting.saltedSkewJoin` with per-task fan-in bounded to
     * ~membership/salts, and the pair set equals the uncapped probe's
-    * (same contract and trade-off notes as the text twin).
+    * (same contract and trade-off notes as the text twin). The pairs come
+    * back unordered, like the text twin's (DedupOps.verifyPairsSplit).
     */
   def cosinePairsLshIncremental(storedBands: DataFrame, storedVecs: DataFrame,
                                 newEmb: DataFrame, threshold: Double,
@@ -1054,7 +1056,6 @@ object SimilarityOps {
         sqrt(col("va_n") * col("vb_n")), 6))
       .filter(col("cos") >= threshold)
       .select(col("vec_a"), col("vec_b"), col("cos"))
-      .orderBy(col("vec_a"), col("vec_b"))
   }
 
   /** Embedding near-dup clusters — the semantic twin of

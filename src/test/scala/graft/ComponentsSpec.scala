@@ -135,15 +135,59 @@ class ComponentsSpec extends AnyFunSuite {
         val (drop, tail) = rest.splitAt(k)
         rest = tail
         seen = seen ++ drop
-        val changed = Components.mergeLabels(
-          labels.toSeq.toDF("node", "component"), drop.toDF("u", "v"))
-          .as[(Long, Long)].collect().toMap
-        labels = labels ++ changed
+        labels = labels ++ merge(labels, drop)
         val batch = Components.connectedComponents(seen.toDF("u", "v"))
           .as[(Long, Long)].collect().toMap
         assert(labels == batch,
           s"trial $trial after ${seen.size} edges: incremental $labels != batch $batch")
+        // replaying the drop just folded moves no node
+        assert(Components.mergeLabels(labels.toSeq.toDF("node", "component"),
+          drop.toDF("u", "v")).isEmpty, s"trial $trial: replay moved nodes")
       }
     }
+  }
+
+  /** One mergeLabels call over driver-side maps; no rows when it returns None. */
+  private def merge(labels: Map[Long, Long],
+                    drop: Seq[(Long, Long)]): Map[Long, Long] =
+    Components.mergeLabels(labels.toSeq.toDF("node", "component"),
+      drop.toDF("u", "v"))
+      .map(_.as[(Long, Long)].collect().toMap).getOrElse(Map.empty)
+
+  test("mergeLabels: smaller new nodes, intra-component pairs, replays, nulls and self-loops") {
+    val labels = Map(10L -> 10L, 11L -> 10L, 20L -> 20L, 21L -> 20L, 22L -> 20L,
+      30L -> 30L, 31L -> 30L)
+    // a new node smaller than both old components it joins becomes the
+    // label of the whole merged component, itself included
+    assert(merge(labels, Seq((5L, 11L), (22L, 5L))) ==
+      Map(5L -> 5L, 10L -> 5L, 11L -> 5L, 20L -> 5L, 21L -> 5L, 22L -> 5L))
+    // two old components joined through a new edge: only the larger one moves
+    assert(merge(labels, Seq((31L, 21L))) ==
+      Map(30L -> 20L, 31L -> 20L))
+    // a pair inside one component moves nothing; neither does a replay of
+    // pairs already folded in
+    assert(Components.mergeLabels(labels.toSeq.toDF("node", "component"),
+      Seq((11L, 10L), (20L, 22L)).toDF("u", "v")).isEmpty)
+    // a new node joining an old component takes its label; the members
+    // keep theirs and are not rewritten
+    assert(merge(labels, Seq((12L, 11L), (13L, 12L))) == Map(12L -> 10L, 13L -> 10L))
+    // a pair of new nodes is a new component labelled by its minimum
+    assert(merge(labels, Seq((41L, 40L))) == Map(40L -> 40L, 41L -> 40L))
+    // null endpoints and self-loops add nothing, old node or new
+    val odd = Seq[(Option[Long], Option[Long])]((None, Some(10L)),
+      (Some(50L), None), (None, None), (Some(50L), Some(50L)),
+      (Some(11L), Some(11L)))
+    assert(Components.mergeLabels(labels.toSeq.toDF("node", "component"),
+      odd.toDF("u", "v")).isEmpty)
+    // ... and do not disturb real edges in the same drop
+    assert(merge(labels, Seq((60L, 60L), (21L, 30L))) == Map(30L -> 20L, 31L -> 20L))
+    // further label columns ride along on relabelled rows and read null on
+    // new nodes
+    val versioned = Seq((10L, 10L, 3L), (11L, 10L, 1L))
+      .toDF("node", "component", "seq")
+    val rows = Components.mergeLabels(versioned, Seq((2L, 11L)).toDF("u", "v"))
+      .get.select("node", "component", "seq").collect()
+      .map(r => (r.getLong(0), r.getLong(1), Option(r.get(2)))).toSet
+    assert(rows == Set((10L, 2L, Some(3L)), (11L, 2L, Some(1L)), (2L, 2L, None)))
   }
 }

@@ -1289,6 +1289,120 @@ class CorpusIngestSpec extends AnyFunSuite {
     graft.core.GraftCaches.releaseAll(spark)
   }
 
+  test("label stores equal the batch contraction of their pair tables across text and sem-maintained embedding drops") {
+    import graft.app.CorpusStore
+    import graft.core.Sinks
+    import graft.operators.{Components, SimilarityOps}
+    val wh = java.nio.file.Files.createTempDirectory("corpus-whlabeq").toString
+    // the maintained view must equal a from-scratch contraction of the
+    // cumulative pair table after EVERY drop — through extensions, new
+    // minima relabelling old members, and replays
+    def agrees(labels: String, pairs: String, a: String, b: String): Unit = {
+      val lp = s"$wh/corpus/$labels"
+      if (Sinks.isBucketedStore(spark, lp)) {
+        val view = CorpusStore.labelView(Sinks.readBucketedPath(spark, lp))
+          .as[(Long, Long)].collect().toMap
+        val batch = Components.connectedComponents(
+          Sinks.readBucketedPath(spark, s"$wh/corpus/$pairs").select(a, b))
+          .as[(Long, Long)].collect().toMap
+        assert(view == batch, s"$labels: maintained $view != batch $batch")
+      }
+    }
+    val third = "parquet footers carry row group statistics that let readers " +
+      "skip whole chunks of columnar data without decoding a single page"
+    val textDrops = Seq(
+      Seq((100L, base), (200L, unrelated)),
+      Seq((150L, base.replace("winter", "summer")),
+        (250L, unrelated.replace("today", "tonight")), (300L, third)),
+      // new minima: 50 relabels {100, 150}, 120 relabels {300}
+      Seq((50L, base.replace("quick", "sly")),
+        (120L, third.replace("single", "lone"))),
+      Seq((20L, base.replace("lazy", "idle")),
+        (30L, unrelated.replace("spark", "flink")), (400L, third)))
+    for (d <- textDrops :+ textDrops(2)) {
+      CorpusIngest.run(spark, d.toDF("doc_id", "text"), wh)
+      agrees("cc_labels", "pairs", "doc_a", "doc_b")
+    }
+    // the relabel path ran: the base family ends labelled by its last,
+    // smallest arrival
+    val textView = CorpusStore.labelView(
+      Sinks.readBucketedPath(spark, s"$wh/corpus/cc_labels"))
+      .as[(Long, Long)].collect().toMap
+    assert(Seq(20L, 50L, 100L, 150L).map(textView.get).distinct == Seq(Some(20L)),
+      s"base family labels: $textView")
+
+    def vec(major: Int, eps: Float = 0f, minor: Int = -1): Array[Float] = {
+      val a = Array.fill(64)(0f); a(major) = 1f
+      a(if (minor < 0) (major + 1) % 64 else minor) += eps; a
+    }
+    val embDrops = Seq(
+      Seq((100L, vec(0)), (200L, vec(30)), (300L, vec(1))),
+      Seq((150L, vec(0, 0.01f)), (250L, vec(30, 0.01f))),
+      // 50 is a new minimum for {100, 150}; 120 sits between the 0- and
+      // 1-families, close enough to pair with both under the LSH cut
+      Seq((50L, vec(0, 0.02f)), (120L, vec(0, 1f))),
+      Seq((20L, vec(30, 0.02f)), (10L, vec(1, 0.01f, minor = 2))))
+      .map(_.toDF("vec_id", "embedding"))
+    val cents = graft.core.GraftCaches.acquire(
+      SimilarityOps.kmeansCentroids(embDrops.head, k = 2, iters = 1))
+    for (d <- embDrops :+ embDrops(2)) {
+      CorpusIngest.ingestEmbeddings(spark, d, wh, trainedCentroids = Some(cents))
+      agrees("emb_cc_labels", "emb_pairs", "vec_a", "vec_b")
+      agrees("sem_cc_labels", "sem_pairs", "vec_a", "vec_b")
+    }
+    for (t <- Seq("cc_labels", "emb_cc_labels", "sem_cc_labels"))
+      assert(Sinks.isBucketedStore(spark, s"$wh/corpus/$t"), s"$t never created")
+    graft.core.GraftCaches.releaseAll(spark)
+  }
+
+  test("incremental pair frames reach the pair append without a global sort") {
+    import graft.core.Sinks
+    import graft.operators.{DedupOps, Multimodal, SimilarityOps}
+    import org.apache.spark.sql.execution.SortExec
+    val wh = java.nio.file.Files.createTempDirectory("corpus-whnosort").toString
+    CorpusIngest.run(spark, Seq((10L, base), (20L, unrelated))
+      .toDF("doc_id", "text"), wh, storeBuckets = 4)
+    def vec(major: Int, eps: Float = 0f): Array[Float] = {
+      val a = Array.fill(64)(0f); a(major) = 1f; a((major + 1) % 64) = eps; a
+    }
+    val embs = Seq((1L, vec(0)), (2L, vec(30))).toDF("vec_id", "embedding")
+    val cents = graft.core.GraftCaches.acquire(
+      SimilarityOps.kmeansCentroids(embs, k = 2, iters = 1))
+    CorpusIngest.ingestEmbeddings(spark, embs, wh, storeBuckets = 4,
+      trainedCentroids = Some(cents))
+    def imgs(ids: Seq[Long]) = Multimodal.syntheticImageCorpus(ids.toDF("doc_id"))
+    CorpusIngest.ingestMedia(spark, imgs(Seq(0L, 20L)), wh, storeBuckets = 4)
+
+    val textInc = Seq((30L, base.replace("winter", "summer"))).toDF("doc_id", "text")
+    val embInc = Seq((3L, vec(0, 0.01f))).toDF("vec_id", "embedding")
+    // AQE off: the executed plan is then the whole static plan
+    val olds = Seq("spark.sql.adaptive.enabled").map(k => k -> spark.conf.get(k))
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      def store(t: String) = Sinks.readBucketedPath(spark, s"$wh/corpus/$t")
+      def globalSorts(df: org.apache.spark.sql.DataFrame) =
+        df.queryExecution.executedPlan.collect { case s: SortExec if s.global => s }
+      val pairs = Seq(
+        "text" -> DedupOps.minhashLshIncremental(store("bands"),
+          store("shingles"), textInc, threshold = 0.5),
+        "embedding" -> SimilarityOps.cosinePairsLshIncremental(store("emb_bands"),
+          store("emb_vecs"), embInc, threshold = 0.42),
+        "sem" -> SimilarityOps.semDedupPairsIncremental(cents, store("sem_asg"),
+          embInc, threshold = 0.9),
+        "media" -> Multimodal.phashNearDupIncremental(store("media_bands"),
+          imgs(Seq(1L))))
+      for ((name, df) <- pairs) {
+        assert(globalSorts(df).isEmpty,
+          s"$name pair frame sorts globally:\n${df.queryExecution.executedPlan}")
+        assert(df.count() == 1L, s"$name pairs: ${df.collect().toSeq}")
+      }
+      // control: the same guard sees a declared query's re-added sort
+      assert(globalSorts(pairs.head._2.orderBy("doc_a", "doc_b")).nonEmpty,
+        "a global sort must be visible to this guard")
+    } finally olds.foreach { case (k, v) => spark.conf.set(k, v) }
+    graft.core.GraftCaches.releaseAll(spark)
+  }
+
   test("audit-log lifecycle: ledger-fed seq stays contiguous, the log compacts, and fsck audits the auditor") {
     import graft.core.Sinks
     val wh = java.nio.file.Files.createTempDirectory("corpus-whaud").toString

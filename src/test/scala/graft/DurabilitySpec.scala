@@ -109,6 +109,43 @@ class DurabilitySpec extends AnyFunSuite {
     }
   }
 
+  test("cutCounted returns the row count of a cut computed once, executor-local and durable") {
+    // the count must come from the materializing pass itself: one upstream
+    // computation per row, and later actions served from the cut
+    val acc = spark.sparkContext.longAccumulator("cut-counted")
+    val counted = udf { (x: Long) => acc.add(1L); x }
+    def frame() = spark.range(1000L).filter(col("id") % 3 === 0)
+      .withColumn("y", counted(col("id")))
+    def check(mode: String): Unit = {
+      acc.reset()
+      val (cutDf, n) = Checkpoints.cutCounted(frame())
+      assert(n == 334L, s"$mode: counted $n rows")
+      assert(acc.value == 334L, s"$mode: ${acc.value} upstream row computations")
+      assert(cutDf.count() == 334L && acc.value == 334L,
+        s"$mode: the cut frame must serve later actions without recomputing")
+      assert(cutDf.queryExecution.optimizedPlan.collectLeaves().forall(
+        _.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]),
+        s"$mode: lineage not cut")
+    }
+    check("executor-local")
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-count").toString
+    Checkpoints.withCheckpointDir(spark, dir) {
+      check("durable")
+      assert(rddCheckpointFiles(dir).nonEmpty, "durable cut wrote no files")
+      // an ingest drop reads its increment size off the durable cut: a
+      // wrong (zero) count would skip the drop and land nothing
+      val wh = java.nio.file.Files.createTempDirectory("ckpt-count-wh").toString
+      val text = "the quick brown fox jumps over the lazy dog while the cat " +
+        "sleeps near the warm fire in winter"
+      val drop = Seq((1L, text), (2L, text.replace("winter", "summer")),
+        (3L, "a second unrelated document about mountains and morning fog"))
+        .toDF("doc_id", "text")
+      assert(CorpusIngest.run(spark, drop, wh) == ((3L, 1L)))
+      assert(spark.read.parquet(s"$wh/corpus/documents").count() == 3L)
+    }
+    graft.core.GraftCaches.releaseAll(spark)
+  }
+
   test("withCheckpointDir cleanup leaves the scratch dir empty after a completed drop") {
     val wh = java.nio.file.Files.createTempDirectory("ckpt-clean-wh").toString
     val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-clean").toString
